@@ -16,11 +16,20 @@ Read-path tiers for derived changelog (best available wins):
    commit (the reference's actual lookup-producer behavior); a window
    read collapses the precomputed files with one narrow groupBy, zero
    table scans, O(window changes) I/O at any table size.
-2. `full-compaction` producer (or lookup windows predating rows) —
-   per-commit KEY sidecars restrict the two merge scans (plus a
-   pk-range predicate for file skipping); no manifest replay.
-3. no producer — manifest replay derives the delta key set; falls back
-   to the full-table single-scan diff when history was rewritten.
+2. keyed tier: the window's changed-key set, from per-commit KEY
+   sidecars (`full-compaction` and `lookup` producers; no manifest
+   replay, plus a pk-range predicate for file skipping) or, with no
+   producer, from manifest replay of the window's delta files. For the
+   deduplicate engine both states come from ONE tagged scan: each file
+   live at either end is read once, tagged with the side(s) it belongs
+   to, semi-joined to the keys, and one groupBy(pk) takes each side's
+   max_by under the merge order (_tagged_scan_pairs). This is also how
+   every lookup commit derives its own rows. Other merge engines (and
+   tables whose read() unions other branches) merge each state
+   separately over the keys and pair the two.
+3. full diff — when history was rewritten (manifest folding) or
+   optimization is off: the bucketed single-scan diff where the layout
+   allows, else two full merged reads.
 """
 
 from __future__ import annotations
@@ -117,12 +126,25 @@ _DRIVER_KEYS_BYTES = 256 << 20
 def _write_keys_driver_side(table: Table, entries, pks: list[str],
                             tmp: str) -> dict | None:
     """Build the keys sidecar on the driver when the commit is small:
-    read ONLY the pk columns of the commit's parquet files (local
-    metadata+column chunks), distinct via Arrow group_by, write one
-    parquet file, and compute the min/max ranges from the in-memory
-    key set (no footer round-trip). Returns the ranges dict, or None
-    to fall back to the Spark path (commit too large, non-parquet
-    format, or any Arrow failure — the fallback is always safe)."""
+    read ONLY the pk columns stored in the commit's parquet files (local
+    metadata+column chunks), take partition-key columns from each
+    entry's partition values (they live in the directory path, not the
+    file), distinct via Arrow group_by, write one parquet file typed as
+    the table's pk struct, and compute the min/max ranges from the
+    in-memory key set (no footer round-trip). Returns the ranges dict,
+    or None to fall back to the Spark path (commit too large,
+    non-parquet format, a partition-key type `cast_partition_value`
+    does not type, or any Arrow failure — the fallback is always
+    safe)."""
+    from pyspark.sql import types as T
+    typed_parts = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+                   T.FloatType, T.DoubleType, T.DateType, T.BooleanType,
+                   T.StringType)
+    schema = table.schema
+    pcols = [c for c in pks if c in schema.partition_keys]
+    if any(not isinstance(schema.data_type(c), typed_parts)
+           for c in pcols):
+        return None
     try:
         total = 0
         paths = []
@@ -138,9 +160,25 @@ def _write_keys_driver_side(table: Table, entries, pks: list[str],
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
-        parts = [pq.read_table(p, columns=pks) for p in paths]
-        keys = pa.concat_tables(parts, promote_options="default") \
-            .group_by(pks).aggregate([])
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from paimon_spark.scanner import cast_partition_value
+        target = to_arrow_schema(_pk_struct(table))
+        fcols = [c for c in pks if c not in pcols]
+        parts = []
+        for e, p in zip(entries, paths):
+            tbl = pq.read_table(p, columns=fcols)
+            cols = []
+            for f in target:
+                if f.name in pcols:
+                    v = cast_partition_value(e.partition.get(f.name),
+                                             schema.data_type(f.name))
+                    cols.append(pa.repeat(pa.scalar(v, f.type),
+                                          tbl.num_rows))
+                else:
+                    cols.append(tbl[f.name].cast(f.type))
+            parts.append(pa.Table.from_arrays(cols, schema=target))
+        keys = pa.concat_tables(parts).group_by(pks).aggregate([])
         # group_by may suffix/reorder nothing for no-agg, but be
         # explicit about column order matching the pk order
         keys = keys.select(pks)
@@ -168,6 +206,15 @@ def _write_keys_driver_side(table: Table, entries, pks: list[str],
             "Spark distinct) for %s", tmp)
         shutil.rmtree(tmp, ignore_errors=True)
         return None
+
+
+def _pk_struct(table: Table):
+    """The table's primary-key columns as a Spark struct: the schema
+    keys sidecars are written with and read back under."""
+    from pyspark.sql import types as T
+    schema = table.schema
+    return T.StructType([T.StructField(c, schema.data_type(c), True)
+                         for c in schema.primary_keys])
 
 
 def _footer_ranges(directory: str, cols: list[str]) -> dict:
@@ -250,11 +297,14 @@ def write_changelog_rows(table: Table, snap) -> None:
     materialize this commit's -U/+U/-D/+I rows — the reference's actual
     lookup-producer behavior (changelog FILES written during the
     commit, LookupChangelogMergeFunctionWrapper.java:54), not just the
-    key set. Cost per commit: the restricted diff of (prev, this)
-    states over the commit's keys (the key sidecar written just before
-    restricts both merge scans). Every windowed changelog read
-    afterwards COLLAPSES these files with one narrow groupBy — zero
-    table scans, O(window changes) I/O regardless of table size."""
+    key set. Cost per commit: the keyed-tier diff of (prev, this) over
+    the commit's keys, read from the key sidecar written just before —
+    for the deduplicate engine one tagged scan of the files live at
+    either end (pk-range pruned), a semi-join to the keys and one
+    groupBy, so the commit pays one shuffle and no schema inference.
+    Every windowed changelog read afterwards COLLAPSES these files with
+    one narrow groupBy — zero table scans, O(window changes) I/O
+    regardless of table size."""
     rows = derive_changelog(table, snap.id - 1, snap.id, optimize=True)
     out = _rows_dir(table.paths, snap)
     tmp = os.path.join(os.path.dirname(out),
@@ -340,17 +390,21 @@ def _collapsed_from_rows(table: Table, from_snapshot: int,
     vals = [c for c in schema.field_names if c not in pks]
     # rows files persist the field set AT WRITE TIME: a window spanning
     # or preceding an add/drop-column carries a different column set
-    # than the current schema, and the strict union/select below would
-    # raise instead of answering — detect the mismatch and fall back to
-    # the key-sidecar / replay tiers, which re-merge under the current
-    # schema (ADVICE r11)
+    # than the current schema, and reading it under the current struct
+    # would null-fill or drop columns instead of answering — detect the
+    # mismatch from the footers (driver metadata, no Spark job) and fall
+    # back to the key-sidecar / replay tiers, which re-merge under the
+    # current schema (ADVICE r11)
+    from pyspark.sql import types as T
     expected = set(schema.field_names) | {KIND_COL}
-    parts = []
-    for sid, d in dirs:
-        p = table.spark.read.parquet(d)
-        if set(p.columns) != expected:
-            return None
-        parts.append(p.withColumn("__sid", F.lit(sid)))
+    if any(_rows_columns(d) not in (None, expected) for _, d in dirs):
+        return None
+    # the known struct, not inference: schema inference is a Spark job
+    # per directory
+    struct = T.StructType(list(schema.struct.fields)
+                          + [T.StructField(KIND_COL, T.StringType())])
+    parts = [table.spark.read.schema(struct).parquet(d)
+             .withColumn("__sid", F.lit(sid)) for sid, d in dirs]
     ev = parts[0]
     for p in parts[1:]:
         ev = ev.unionByName(p)
@@ -372,6 +426,17 @@ def _collapsed_from_rows(table: Table, from_snapshot: int,
                F.col("__oc")).alias("__old"),
         F.when(F.col("__last_a") == F.col("__last"),
                F.col("__nc")).alias("__new"))
+
+
+def _rows_columns(directory: str) -> set[str] | None:
+    """Column names of a changelog-rows directory, from one data file's
+    parquet footer (every file of one write shares its schema); None
+    when the directory holds no data file."""
+    import pyarrow.parquet as pq
+    for fn in sorted(os.listdir(directory)):
+        if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+            return set(pq.read_schema(os.path.join(directory, fn)).names)
+    return None
 
 
 def _sidecar_key_df(table: Table, from_snapshot: int,
@@ -431,7 +496,8 @@ def _sidecar_key_df(table: Table, from_snapshot: int,
     # consumers are leftsemi joins (duplicates can't change results),
     # and cross-commit overlap is bounded by the window's commit count
     # — cheaper than paying a shuffle to dedup the key side
-    return table.spark.read.parquet(*dirs), pred
+    # explicit pk struct: inferring the schema would cost a Spark job
+    return table.spark.read.schema(_pk_struct(table)).parquet(*dirs), pred
 
 
 def _delta_key_df(table: Table, from_snapshot: int,
@@ -499,18 +565,52 @@ def _merged_restricted(table: Table, snapshot_id: int | None,
     return table._apply_defaults(apply_merge(filt, table.schema))
 
 
-def _single_scan_pairs(table: Table, s_old: int, s_new: int,
-                       keys: DataFrame | None = None) -> DataFrame | None:
+def _side_states(rows: DataFrame, schema) -> DataFrame:
+    """(pk..., __old, __new) merged-state pairs from rows tagged by side
+    (`__in_old` / `__in_new`; a row may be on both): one groupBy(pk)
+    takes each side's top row with max_by under the merge's own order —
+    order_struct, which ends in TIE_COL when the rows carry it, exactly
+    as merge_deduplicate orders them. The tie is REQUIRED whenever it
+    is resolvable: concurrent writers bake equal sequences, and an
+    ordering without the stable file tie makes each max_by pick an
+    iteration-arbitrary winner — the diff then disagrees with the merged
+    reads' tie rule (and can even report no change where the tie
+    semantics say one happened)."""
+    from paimon_spark.operators.merge import RETRACT_KINDS, order_struct
+    pks = schema.primary_keys
+    vals = [c for c in schema.field_names if c not in pks]
+    order = order_struct(schema, df=rows)
+    row = F.struct(*[F.col(c) for c in vals], F.col(KIND_COL))
+
+    def _top(side):
+        return F.max_by(F.when(F.col(side), row),
+                        F.when(F.col(side), order))
+
+    j = rows.groupBy(*pks).agg(_top("__in_old").alias("__ot"),
+                               _top("__in_new").alias("__nt"))
+
+    def _state(c):
+        # a side's merged state: its top row's values, unless the top
+        # is a retraction (DropDeleteReader) or the side had no rows
+        return F.when(c.isNotNull()
+                      & ~c.getField(KIND_COL).isin(*RETRACT_KINDS),
+                      F.struct(*[c.getField(v).alias(v) for v in vals]))
+
+    return j.select(*pks, _state(F.col("__ot")).alias("__old"),
+                    _state(F.col("__nt")).alias("__new"))
+
+
+def _single_scan_pairs(table: Table, s_old: int,
+                       s_new: int) -> DataFrame | None:
     """(pk..., __old, __new) merged-state pairs from ONE bucketed scan
     of the union of both snapshots' files, rows tagged by origin side —
     so the pairing groupBy runs on the scan's own HashPartitioning with
     ZERO exchange (deduplicate engine only: both states are max_by over
-    each side's rows, exactly merge_deduplicate). With `keys` (the
-    delta-restriction key set) a broadcast semi-join prunes unchanged
-    keys' rows map-side before the groupBy. Returns None when the
+    each side's rows, exactly merge_deduplicate). Returns None when the
     layout can't ride the bucketed view — callers use the two-read
     shape."""
-    from paimon_spark.operators.merge import RETRACT_KINDS, order_struct
+    from paimon_spark.operators.merge import stable_tie_struct
+    from paimon_spark.schema import TIE_COL
     schema = table.schema
     if schema.merge_engine != "deduplicate":
         return None
@@ -530,48 +630,72 @@ def _single_scan_pairs(table: Table, s_old: int, s_new: int,
     if got is None:
         return None
     df, names = got
-    pks = schema.primary_keys
-    vals = [c for c in schema.field_names if c not in pks]
     fmap = table.spark.createDataFrame(
         [(names[p], p in old_set, p in new_set) for p in ents],
         "__fn string, __in_old boolean, __in_new boolean")
-    from paimon_spark.operators.merge import stable_tie_struct
     df = table._apply_defaults(df)
-    # __tie materialized WHILE _metadata is still resolvable (it is a
-    # scan pseudo-column; the joins below lose it). The tie component
-    # is REQUIRED here, not a nicety: concurrent writers bake equal
-    # sequences, and an ordering without the stable file tie makes each
-    # max_by pick an iteration-arbitrary winner — the diff then
-    # disagrees with the merged reads' tie rule (and can even report no
-    # change where the tie semantics say one happened).
+    # the tie is materialized WHILE _metadata is still resolvable (it is
+    # a scan pseudo-column; the join below loses it)
     d2 = (df.withColumn(
               "__fn",
               F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
-          .withColumn("__tie", stable_tie_struct())
+          .withColumn(TIE_COL, stable_tie_struct())
           .join(F.broadcast(fmap), "__fn"))
-    if keys is not None:
-        # un-hinted: AQE broadcasts a small key set at runtime; a huge
-        # one shuffles ONLY the keys side to the scan's partitioning,
-        # so the zero-exchange property of the big side holds either way
-        d2 = d2.join(keys, pks, "leftsemi")
-    order = F.struct(order_struct(schema).alias("o"),
-                     F.col("__tie").alias("tie"))
-    row = F.struct(*[F.col(c) for c in vals], F.col(KIND_COL))
-    oldt = F.max_by(F.when(F.col("__in_old"), row),
-                    F.when(F.col("__in_old"), order))
-    newt = F.max_by(F.when(F.col("__in_new"), row),
-                    F.when(F.col("__in_new"), order))
-    j = d2.groupBy(*pks).agg(oldt.alias("__ot"), newt.alias("__nt"))
+    return _side_states(d2, schema)
 
-    def _state(c):
-        # a side's merged state: its top row's values, unless the top
-        # is a retraction (DropDeleteReader) or the side had no rows
-        return F.when(c.isNotNull()
-                      & ~c.getField(KIND_COL).isin(*RETRACT_KINDS),
-                      F.struct(*[c.getField(v).alias(v) for v in vals]))
 
-    return j.select(*pks, _state(F.col("__ot")).alias("__old"),
-                    _state(F.col("__nt")).alias("__new"))
+def _tagged_scan_pairs(table: Table, s_old: int, s_new: int,
+                       keys: DataFrame, pred=None) -> DataFrame:
+    """(pk..., __old, __new) merged-state pairs restricted to `keys`,
+    from ONE read of each file of the two states (deduplicate engine:
+    both states are max_by over each side's rows, exactly
+    merge_deduplicate). Both snapshots are planned with the window's
+    pk-range predicate; the surviving entries split by
+    (file_path, dv_path) into live-at-both-ends, only-at-the-start and
+    only-at-the-end groups, each read once with its literal side tags
+    and the stable tie, semi-joined to the keys, and paired by
+    _side_states — one scan and one exchange, where two restricted
+    merges plus a pairing groupBy read the shared files twice and
+    shuffled three times. A file whose deletion vector changed in the
+    window is two entries (old DV, new DV), so each side masks its own
+    positions."""
+    from paimon_spark.functions.blob import blob_columns, materialize_blobs
+    from paimon_spark.schema import TIE_COL
+    schema = table.schema
+    old_e = table.new_scan().plan(pred, snapshot_id=s_old).entries
+    new_e = table.new_scan().plan(pred, snapshot_id=s_new).entries
+    old_ids = {(e.file_path, e.dv_path) for e in old_e}
+    new_ids = {(e.file_path, e.dv_path) for e in new_e}
+    groups = (
+        ([e for e in new_e if (e.file_path, e.dv_path) in old_ids],
+         True, True),
+        ([e for e in old_e if (e.file_path, e.dv_path) not in new_ids],
+         True, False),
+        ([e for e in new_e if (e.file_path, e.dv_path) not in old_ids],
+         False, True))
+    parts = [table._read_files(g, with_tie=True)
+             .withColumn("__in_old", F.lit(o))
+             .withColumn("__in_new", F.lit(n))
+             for g, o, n in groups if g]
+    if not parts:
+        parts = [table._empty_df(with_hidden=True)
+                 .withColumn("__in_old", F.lit(False))
+                 .withColumn("__in_new", F.lit(False))]
+    # all-or-none across the groups, as _read_files is within one: a
+    # NULL tie on some rows would bias the order against the others
+    if any(TIE_COL not in p.columns for p in parts):
+        parts = [p.drop(TIE_COL) for p in parts]
+    rows = parts[0]
+    for p in parts[1:]:
+        rows = rows.unionByName(p)
+    rows = table._apply_defaults(rows)
+    if pred is not None:
+        rows = rows.filter(pred.to_spark())
+    rows = rows.join(keys, schema.primary_keys, "leftsemi")
+    bcols = blob_columns(schema)
+    if bcols:
+        rows = materialize_blobs(rows, bcols, table.paths.root)
+    return _side_states(rows, schema)
 
 
 def derive_changelog(table: Table, from_snapshot: int | None,
@@ -633,19 +757,27 @@ def derive_changelog(table: Table, from_snapshot: int | None,
             got = _delta_key_df(table, from_snapshot, to_sid)
             if got is not None:
                 keys, delta_bytes = got
+    opts = schema.options
+    one_scan = (schema.merge_engine == "deduplicate"
+                # read() unions other branches into these tables; keep
+                # the per-state merged reads for them
+                and not opts.get("scan.fallback-branch")
+                and opts.get("chain-table.enabled") != "true")
+    if j is None and keys is not None and one_scan:
+        # keyed tier, deduplicate engine: both states from ONE tagged
+        # read of the window's files, restricted to the changed keys
+        j = _tagged_scan_pairs(table, from_snapshot, to_sid, keys,
+                               range_pred)
     if j is None and keys is None and to_sid is not None:
         # FULL diff: ONE bucketed scan of old∪new files, rows tagged by
         # origin side, pairing groupBy on the scan's partitioning —
         # zero exchange end to end (deduplicate engine + bucketed-view
-        # eligible layouts). When the delta KEY SET is derivable the
-        # two-read restricted shape below wins instead: it scans only
-        # the changed keys' rows (measured at sf0.1: 0.54 s vs 0.70 s
-        # single-scan-with-semi-join) and its one exchange carries
-        # O(changed keys) — fine at any scale.
+        # eligible layouts)
         j = _single_scan_pairs(table, from_snapshot, to_sid)
     if j is None:
         if keys is not None:
-            # both merge branches semi-join against the same key set.
+            # other merge engines: both merge branches semi-join against
+            # the same key set.
             # Small delta: inline the keys subtree into BOTH branches —
             # the two scans+distincts run concurrently inside one job,
             # which beats persist's materialization barrier (measured

@@ -110,12 +110,8 @@ def assign_buckets(spark, table_path: str, schema: TableSchema,
     # consolidate BEFORE loading: the DataFrame this call returns stays
     # lazy in the caller (stage/commit executes it later), so deleting
     # index files after load_index would break that pending plan
-    try:
-        files_cap = int(schema.options.get(
-            "dynamic-bucket.index-consolidate-files",
-            str(CONSOLIDATE_FILES)))
-    except ValueError:
-        files_cap = CONSOLIDATE_FILES
+    files_cap = int(schema.options.get(
+        "dynamic-bucket.index-consolidate-files", str(CONSOLIDATE_FILES)))
     _maybe_consolidate(spark, table_path, files_cap)
     idx = load_index(spark, table_path, schema)
     if idx is None:
@@ -172,13 +168,16 @@ def _py_sort_key_ok(schema: TableSchema, keys: list[str]) -> bool:
     """True iff Python tuple ordering of collected key values provably
     matches Spark's orderBy on those columns: integrals, strings
     (compared as UTF-8 bytes — code-point order, same as Spark's binary
-    compare), booleans, dates, timestamps, decimals, binary. Float and
-    double keys are excluded (Spark orders NaN largest; Python NaN
-    comparisons are unordered)."""
+    compare), booleans, dates, zone-less timestamps, decimals, binary.
+    Float and double keys are excluded (Spark orders NaN largest; Python
+    NaN comparisons are unordered), and so is TimestampType: collect()
+    returns it as a naive datetime in the DRIVER's local zone, which
+    neither orders like the UTC instant across a DST fold nor
+    round-trips through the index's UTC arrow field."""
     from pyspark.sql import types as T
     ok = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-          T.StringType, T.BooleanType, T.DateType, T.TimestampType,
-          T.TimestampNTZType, T.DecimalType, T.BinaryType)
+          T.StringType, T.BooleanType, T.DateType, T.TimestampNTZType,
+          T.DecimalType, T.BinaryType)
     return all(isinstance(schema.data_type(k), ok) for k in keys)
 
 

@@ -125,6 +125,66 @@ def test_dynamic_bucket_small_fill_equals_distributed(spark, wh):
     assert len(a) == len({(k, f"s{k % 7}") for k in range(60)})
 
 
+def test_dynamic_bucket_timestamp_keys_non_utc_driver(spark, wh):
+    """TIMESTAMP keys reach the dynamic-bucket index as the instants the
+    table stores whatever the driver's local zone is: under
+    TZ=America/New_York (across its DST start) the index holds exactly
+    the table's keys, and a second append of the same keys finds every
+    one of them instead of indexing shifted copies."""
+    import datetime as dt
+    import time
+
+    from paimon_spark.operators import dynamic_bucket as db
+    schema = T.StructType([T.StructField("ts", T.TimestampType()),
+                           T.StructField("v", T.LongType())])
+    utc = dt.timezone.utc
+    rows = [(dt.datetime(2024, 3, 10, h, 30, tzinfo=utc), h)
+            for h in range(24)]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        t = Table.create(f"{wh}/dts", schema, primary_keys=["ts"],
+                         options={"bucket": "-1",
+                                  "dynamic-bucket.target-row-count": "5"},
+                         spark=spark)
+        t.append(spark.createDataFrame(rows, schema))
+        t.append(spark.createDataFrame([(ts, v + 100) for ts, v in rows],
+                                       schema))
+        micros = F.unix_micros("ts").alias("us")
+        idx = sorted(r.us for r in spark.read.parquet(f"{wh}/dts/index")
+                     .select(micros).collect())
+        got = t.read().select(micros, "v").collect()
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    want = [int(ts.timestamp()) * 1_000_000 for ts, _ in rows]
+    assert idx == want
+    assert sorted((r.us, r.v) for r in got) == \
+        [(us, v + 100) for us, (_, v) in zip(want, rows)]
+    assert db._load_count(f"{wh}/dts") == len(rows)
+
+
+def test_dynamic_bucket_bad_consolidate_option_raises(spark, wh):
+    """A malformed dynamic-bucket.index-consolidate-files raises like
+    its sibling dynamic-bucket options instead of silently running
+    with the default cap."""
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("v", T.StringType())])
+    t = Table.create(f"{wh}/dbad", schema, primary_keys=["k"],
+                     options={"bucket": "-1",
+                              "dynamic-bucket.target-row-count": "10",
+                              "dynamic-bucket.index-consolidate-files":
+                                  "many"},
+                     spark=spark)
+    with pytest.raises(ValueError):
+        t.append(spark.createDataFrame([(1, "a")], schema))
+    assert t.paths.latest_snapshot_id() is None
+
+
 def test_procedures_tags_rollback_expire(spark, wh):
     schema = T.StructType([T.StructField("v", T.LongType())])
     t = Table.create(f"{wh}/p", schema, spark=spark)

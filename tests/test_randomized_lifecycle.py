@@ -1209,3 +1209,104 @@ def test_concurrent_writers_racing_index_refresh_stress(spark, wh):
     wantd = sorted((r.id, r.bk) for r in
                    spark.read.parquet(dout).select("id", "bk").collect())
     assert gotd == wantd
+
+
+def test_commit_time_changelog_equals_full_diff_model(spark, wh):
+    """The lookup producer's commit-time changelog rows equal the
+    unoptimized diff of the two merged states, derive_changelog(t, s-1,
+    s, optimize=False), on every data commit of a seeded random
+    sequence — on a partitioned fixed-bucket table and an unpartitioned
+    dynamic-bucket one, both with rowkind.field deletes and a
+    sequence.field. The sequence mixes upserts with: two writers that
+    stage before either commits (equal sequences, so the stable file tie
+    decides the winner), an add_column between commits, a
+    deletion-vector delete, and an INSERT OVERWRITE."""
+    import os
+    import random
+
+    from paimon_spark.operators.changelog import _rows_dir, derive_changelog
+    base = [T.StructField("pt", T.IntegerType()),
+            T.StructField("k", T.LongType()),
+            T.StructField("v", T.LongType()),
+            T.StructField("ts", T.LongType()),
+            T.StructField("rk", T.StringType())]
+    opts = {"changelog-producer": "lookup", "rowkind.field": "rk",
+            "sequence.field": "ts"}
+    tables = [
+        Table.create(f"{wh}/cl_diff_part", T.StructType(base),
+                     primary_keys=["pt", "k"], partition_keys=["pt"],
+                     options={**opts, "bucket": "2",
+                              "deletion-vectors.enabled": "true"},
+                     spark=spark),
+        Table.create(f"{wh}/cl_diff_dyn", T.StructType(base),
+                     primary_keys=["k"],
+                     options={**opts, "bucket": "-1",
+                              "dynamic-bucket.target-row-count": "8"},
+                     spark=spark),
+    ]
+    for n, t in enumerate(tables):
+        rng = random.Random(41 + n)
+        ts = [0]
+
+        def batch(keys, v=None, deletes=True, seq=None):
+            fields = t.schema.field_names
+            rows = []
+            for k in keys:
+                ts[0] += rng.randint(0, 2)         # repeats: equal ts
+                r = {"pt": k % 3, "k": k,
+                     "v": rng.randint(0, 99) if v is None else v,
+                     # some stale
+                     "ts": ts[0] - rng.randint(0, 3) if seq is None
+                     else seq,
+                     "rk": "-D" if deletes and rng.random() < 0.2
+                     else "+I", "extra": rng.randint(0, 9)}
+                rows.append(tuple(r[f] for f in fields))
+            return spark.createDataFrame(rows, t.schema.struct)
+
+        def check():
+            snap = t.paths.latest_snapshot()
+            cols = t.schema.field_names + ["_row_kind"]
+            got = sorted(tuple(r) for r in spark.read.parquet(
+                _rows_dir(t.paths, snap)).select(*cols).collect())
+            t._read_cache.clear()
+            want = sorted(tuple(r) for r in derive_changelog(
+                t, snap.id - 1, snap.id, optimize=False)
+                .select(*cols).collect())
+            assert got == want, (t.path, snap.id)
+
+        t.append(batch(range(24), deletes=False))
+        steps = ["upsert"] * 3 + ["concurrent", "add_column",
+                                  "overwrite"]
+        if n == 0:
+            steps.append("dv")
+        rng.shuffle(steps)
+        for step in steps:
+            if step == "upsert":
+                t.append(batch(rng.sample(range(30), 6)))
+            elif step == "concurrent":
+                # both writers stage against the same latest snapshot:
+                # equal sequences for the keys they share
+                keys = rng.sample(range(24), 4)
+                w1, w2 = t.writer(), t.writer()
+                seq = ts[0] + 5
+                e1 = w1.stage(batch(keys, 1000, False, seq))
+                e2 = w2.stage(batch(keys, 2000, False, seq))
+                w1.commit(e1)
+                check()
+                w2.commit(e2)
+            elif step == "add_column":
+                t.alter(lambda sc: sc.add_column("extra", T.LongType()))
+                t.append(batch(rng.sample(range(30), 5)))
+            elif step == "overwrite":
+                t.overwrite(batch(rng.sample(range(30), 8),
+                                  deletes=False))
+            else:
+                victim = rng.choice(sorted(r.k for r in t.read()
+                                           .select("k").collect()))
+                pred = P.eq("k", victim)
+                t._delete_with_dv(t.new_scan().plan(pred).entries, pred)
+                assert any(e.dv_path for e in t.paths.live_entries(
+                    t.paths.latest_snapshot()))
+            check()
+        assert os.path.isdir(os.path.join(t.paths.meta_root,
+                                          "changelog-rows"))

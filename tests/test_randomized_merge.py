@@ -492,16 +492,25 @@ def test_changelog_sidecar_range_predicate_skips_files(spark, wh):
                     for r in derive_changelog(t, 2).collect())
     assert cl == want
     assert seen_preds == []
-    # rows dirs removed → key-sidecar path: two restricted reads, BOTH
-    # carrying the pk-range predicate
+    # rows dirs removed → key-sidecar path: both states are planned
+    # (snapshots 2 and 3) with the pk-range predicate
     import shutil as _sh
+
+    from paimon_spark.scanner import Scanner
     _sh.rmtree(os.path.join(t.paths.meta_root, "changelog-rows"))
     t._read_cache.clear()
-    with patch.object(Table, "read", spy):
+    orig_plan = Scanner.plan
+    planned = []
+
+    def plan_spy(self, predicate=None, snapshot_id=None, *a, **kw):
+        planned.append((snapshot_id, predicate))
+        return orig_plan(self, predicate, snapshot_id, *a, **kw)
+
+    with patch.object(Scanner, "plan", plan_spy):
         cl = sorted((r.k, r.v, r._row_kind)
                     for r in derive_changelog(t, 2).collect())
     assert cl == want
-    assert len(seen_preds) == 2 and all(p is not None for p in seen_preds)
+    assert {sid for sid, p in planned if p is not None} == {2, 3}
     # the range predicate prunes the untouched files at plan time:
     # s1's 0..99 file (and s2's 100..149 rows live in a file whose
     # range 100..199 overlaps — kept)

@@ -303,16 +303,16 @@ def test_decoupled_changelog_lifecycle(spark, wh):
          .outputMode("append").trigger(availableNow=True).start())
     q.awaitTermination(120)
     rows = spark.table(sink).collect()
-    state = {}
-    # fold: deletes then adds per snapshot would need sid attribution;
-    # keyed last-image suffices here because each key's final image is
-    # unique in this history
-    for r in rows:
-        if r["_row_kind"] in ("+I", "+U"):
-            state[r.k] = r.v
-    for r in rows:
-        if r["_row_kind"] == "-D" and state.get(r.k) == r.v:
-            state.pop(r.k, None)
+    # fold as a multiset: the memory sink's row order follows the order
+    # Spark reads the rows files in (by size), not snapshot order, so
+    # each -U/-D cancels one equal (k, v) add wherever it arrives
+    from collections import Counter
+    live = Counter((r.k, r.v) for r in rows
+                   if r["_row_kind"] in ("+I", "+U"))
+    live.subtract((r.k, r.v) for r in rows
+                  if r["_row_kind"] in ("-U", "-D"))
+    assert set(live.values()) <= {0, 1}
+    state = {k: v for (k, v), n in live.items() if n}
     assert state == {r.k: r.v for r in t.read().collect()}
 
     # tighten the changelog horizon: keep only the newest 2
