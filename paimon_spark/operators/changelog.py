@@ -24,9 +24,8 @@ Read-path tiers for derived changelog (best available wins):
    live at either end is read once, tagged with the side(s) it belongs
    to, semi-joined to the keys, and one groupBy(pk) takes each side's
    max_by under the merge order (_tagged_scan_pairs). This is also how
-   every lookup commit derives its own rows. Other merge engines (and
-   tables whose read() unions other branches) merge each state
-   separately over the keys and pair the two.
+   every lookup commit derives its own rows. Other merge engines
+   merge each state separately over the keys and pair the two.
 3. full diff — when history was rewritten (manifest folding) or
    optimization is off: the bucketed single-scan diff where the layout
    allows, else two full merged reads.
@@ -136,13 +135,11 @@ def _write_keys_driver_side(table: Table, entries, pks: list[str],
     non-parquet format, a partition-key type `cast_partition_value`
     does not type, or any Arrow failure — the fallback is always
     safe)."""
-    from pyspark.sql import types as T
-    typed_parts = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-                   T.FloatType, T.DoubleType, T.DateType, T.BooleanType,
-                   T.StringType)
+    from paimon_spark.scanner import (TYPED_PARTITION_TYPES,
+                                      cast_partition_value)
     schema = table.schema
     pcols = [c for c in pks if c in schema.partition_keys]
-    if any(not isinstance(schema.data_type(c), typed_parts)
+    if any(not isinstance(schema.data_type(c), TYPED_PARTITION_TYPES)
            for c in pcols):
         return None
     try:
@@ -161,8 +158,6 @@ def _write_keys_driver_side(table: Table, entries, pks: list[str],
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
-
-        from paimon_spark.scanner import cast_partition_value
         target = to_arrow_schema(_pk_struct(table))
         fcols = [c for c in pks if c not in pcols]
         parts = []
@@ -757,13 +752,8 @@ def derive_changelog(table: Table, from_snapshot: int | None,
             got = _delta_key_df(table, from_snapshot, to_sid)
             if got is not None:
                 keys, delta_bytes = got
-    opts = schema.options
-    one_scan = (schema.merge_engine == "deduplicate"
-                # read() unions other branches into these tables; keep
-                # the per-state merged reads for them
-                and not opts.get("scan.fallback-branch")
-                and opts.get("chain-table.enabled") != "true")
-    if j is None and keys is not None and one_scan:
+    if (j is None and keys is not None
+            and schema.merge_engine == "deduplicate"):
         # keyed tier, deduplicate engine: both states from ONE tagged
         # read of the window's files, restricted to the changed keys
         j = _tagged_scan_pairs(table, from_snapshot, to_sid, keys,

@@ -46,13 +46,22 @@ def _intersect_ranges(a: list[tuple[int, int]],
     return out
 
 
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_FLOAT_TYPES = (T.FloatType, T.DoubleType)
+# partition-key types cast_partition_value returns as typed python
+# values; any other type (timestamp, decimal, ...) comes back as the raw
+# path string
+TYPED_PARTITION_TYPES = _INT_TYPES + _FLOAT_TYPES + (
+    T.DateType, T.BooleanType, T.StringType)
+
+
 def cast_partition_value(raw: str | None, dtype: T.DataType) -> Any:
     """Hive-path string → typed python value for pruning."""
     if raw is None or raw == "__HIVE_DEFAULT_PARTITION__":
         return None
-    if isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+    if isinstance(dtype, _INT_TYPES):
         return int(raw)
-    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+    if isinstance(dtype, _FLOAT_TYPES):
         return float(raw)
     if isinstance(dtype, T.DateType):
         return dt.date.fromisoformat(raw)

@@ -492,3 +492,40 @@ def test_chain_stream_scanner_merge_snapshot(spark, wh):
     p1 = sorted((r.dt, r.id, r.v) for r in sc.next_batch().collect())
     assert p1 == [("d3", 1, "s2"), ("d3", 2, "d3-upd"),
                   ("d3", 3, "s2"), ("d3", 9, "d3-new")], p1
+
+
+def test_changelog_ignores_fallback_branch(spark, wh, monkeypatch):
+    """A changelog window diffs the table's own snapshots: the fallback
+    branch that read() unions in for missing partitions belongs to
+    neither state. The keyed tier (delta-key replay, one tagged scan)
+    and the full diff agree on it."""
+    from paimon_spark.operators import changelog as cl
+    schema = T.StructType([T.StructField("dt", T.StringType()),
+                           T.StructField("k", T.LongType()),
+                           T.StructField("v", T.LongType())])
+    t = Table.create(f"{wh}/fb_cl", schema, partition_keys=["dt"],
+                     primary_keys=["dt", "k"], options={"bucket": "1"},
+                     spark=spark)
+    t.append(spark.createDataFrame([("d1", 1, 1), ("d1", 2, 2)], schema))
+    fb = t.create_branch("full")
+    fb.append(spark.createDataFrame([("d9", 5, 5)], schema))
+    t.schema.options["scan.fallback-branch"] = "full"
+    t.append(spark.createDataFrame([("d1", 1, 10), ("d1", 3, 3)], schema))
+    assert ("d9", 5, 5) in {tuple(r) for r in t.read().collect()}
+
+    tagged = []
+    orig = cl._tagged_scan_pairs
+
+    def spy(*a, **kw):
+        tagged.append(a[1:3])
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(cl, "_tagged_scan_pairs", spy)
+
+    def canon(df):
+        return sorted((r.dt, r.k, r.v, r._row_kind) for r in df.collect())
+
+    want = [("d1", 1, 1, "-U"), ("d1", 1, 10, "+U"), ("d1", 3, 3, "+I")]
+    assert canon(cl.derive_changelog(t, 1, 2)) == want
+    assert tagged == [(1, 2)]
+    assert canon(cl.derive_changelog(t, 1, 2, optimize=False)) == want

@@ -492,8 +492,9 @@ def test_changelog_sidecar_range_predicate_skips_files(spark, wh):
                     for r in derive_changelog(t, 2).collect())
     assert cl == want
     assert seen_preds == []
-    # rows dirs removed → key-sidecar path: both states are planned
-    # (snapshots 2 and 3) with the pk-range predicate
+    # rows dirs removed → key-sidecar path: exactly two state plans
+    # (snapshots 2 and 3), BOTH carrying the pk-range predicate — no
+    # unpredicated full-table plan in the keyed tier
     import shutil as _sh
 
     from paimon_spark.scanner import Scanner
@@ -510,7 +511,9 @@ def test_changelog_sidecar_range_predicate_skips_files(spark, wh):
         cl = sorted((r.k, r.v, r._row_kind)
                     for r in derive_changelog(t, 2).collect())
     assert cl == want
-    assert {sid for sid, p in planned if p is not None} == {2, 3}
+    assert len(planned) == 2
+    assert all(p is not None for _, p in planned)
+    assert {sid for sid, _ in planned} == {2, 3}
     # the range predicate prunes the untouched files at plan time:
     # s1's 0..99 file (and s2's 100..149 rows live in a file whose
     # range 100..199 overlaps — kept)
