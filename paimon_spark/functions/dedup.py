@@ -10,7 +10,12 @@ with no shared-hash-library requirement.
 Scale notes (100 TB): shingling/minhashing is embarrassingly parallel
 per-row; the LSH bucket-join shuffles only (band_key, doc_id) pairs —
 k*|docs| tiny rows — and the candidate verification joins shingle SETS
-only for docs that share a bucket. No all-pairs anything.
+only for docs that share a bucket. No all-pairs anything. Incremental
+dedup against a persisted band index (`Table.dedup_against_index`)
+touches each new batch once: one checkpointed projection (exact-copy
+rep, shingles, band keys) feeds the corpus join, the within-batch pairs
+and the batch side of verify; the corpus is shingled only for candidate
+ids and never re-banded while the index is fresh.
 """
 
 from __future__ import annotations
@@ -91,8 +96,12 @@ def minhash_signature(col: Column, k: int = 16, n: int = 3) -> list[Column]:
 
 
 def with_minhash(df: DataFrame, id_col: str, text_col: str,
-                 k: int = 16, n: int = 3) -> DataFrame:
-    """(id, mh0..mh{k-1}) with each expensive intermediate computed ONCE.
+                 k: int = 16, n: int = 3, keep: tuple[str, ...] = (),
+                 shingles_as: str | None = None) -> DataFrame:
+    """(id, *keep, mh0..mh{k-1}) with each expensive intermediate
+    computed ONCE. `keep` columns pass through unchanged; `shingles_as`
+    also keeps the shingle-string array under that name (the verify
+    side of a candidate query reads it instead of re-shingling).
 
     THREE projections, each a named intermediate referenced >1 time so
     Catalyst's CollapseProject keeps it as its own stage instead of
@@ -116,20 +125,25 @@ def with_minhash(df: DataFrame, id_col: str, text_col: str,
        doubled execution (dedup_minhash_pairs 1.38 → 2.36 s measured
        interleaved same-session). SQL-text parsing happens JVM-side in
        one round-trip and yields the literal-baked plan — values
-       bit-identical, same alias names."""
-    t = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__tok"))
-    tk = F.col("__tok")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(tk) - (n - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(tk, i, n), " "))
+       bit-identical, same alias names.
+    A kept shingle array is its own projection between 1. and 2.
+    (referenced twice, so it stays one): the hashes read it, never a
+    second shingle build."""
+    cols = [id_col, *keep]
+    t = df.select(*cols, tokens(F.col(text_col)).alias("__tok"))
+    grams = shingles_from_tokens(F.col("__tok"), n)
+    if shingles_as is not None:
+        t = t.select(*cols, grams.alias(shingles_as))
+        cols.append(shingles_as)
+        grams = F.col(shingles_as)
     h = t.select(
-        F.col(id_col),
+        *cols,
         F.transform(
             grams,
             lambda s: F.conv(F.substring(F.md5(F.encode(s, "UTF-8")), 1, 8),
                              16, 10).cast("long")).alias("__sh"))
     return h.selectExpr(
-        id_col,
+        *[f"`{c}`" for c in cols],
         *[f"array_min(transform(__sh, h -> ({a} * h + {b})"
           f" % {MERSENNE31})) AS mh{j}"
           for j, (a, b) in enumerate(_coeffs(k))])

@@ -4008,28 +4008,40 @@ class Table:
             return None
 
     @staticmethod
-    def _dedup_band_rows(df: DataFrame, id_col: str, text_col: str,
+    def _dedup_band_keys(df: DataFrame, id_col: str, text_col: str,
                          k: int, bands: int, n: int,
-                         n_buckets: int) -> DataFrame:
-        """(id, bk, bucket) band rows — shared by the index build, the
-        incremental refresh, AND the query side, so both sides of the
-        candidate join hash identical band keys."""
+                         keep: tuple[str, ...] = (),
+                         shingles_as: str | None = None) -> DataFrame:
+        """(id, *keep, [shingles], __bk0..__bk{bands-1}): each
+        document's LSH band keys — the ONE band-key definition shared by
+        the index build, the incremental refresh AND the query side, so
+        both sides of the candidate join hash identical band keys."""
         from paimon_spark.functions.dedup import band_keys, with_minhash
-        sig = with_minhash(df.select(F.col(id_col), F.col(text_col)),
-                           id_col, text_col, k, n)
-        sig = sig.select(F.col(id_col).alias("id"), *band_keys(k, bands))
+        sig = with_minhash(df, id_col, text_col, k, n, keep, shingles_as)
         # band keys hash to ONE long (8 B/row instead of a 35-char md5
         # string): equal keys still collide identically, and the ~2⁻⁶⁴
         # cross-key collisions only ADD candidates, which exact verify
         # kills — never a lost pair
-        stacked = sig.select(
-            "id",
-            F.explode(F.array(*[
-                F.xxhash64(F.concat_ws("#", F.lit(str(b)),
-                                       F.col(f"band{b}")))
-                for b in range(bands)])).alias("bk"))
-        return stacked.withColumn(
-            "bucket", F.pmod(F.xxhash64("bk"), F.lit(n_buckets)))
+        return sig.select(
+            F.col(id_col).alias("id"), *keep,
+            *([shingles_as] if shingles_as else []),
+            *[F.xxhash64(F.concat_ws("#", F.lit(str(b)), key)
+                         ).alias(f"__bk{b}")
+              for b, key in enumerate(band_keys(k, bands))])
+
+    @staticmethod
+    def _dedup_band_rows(sig: DataFrame, bands: int, n_buckets: int,
+                         *keep: str) -> DataFrame:
+        """(id, *keep, bk, bucket) band rows of `_dedup_band_keys`.
+        The explode reads an array BUILT here, never an array column:
+        over a column, Catalyst infers a size(...) > 0 filter and
+        pushes it below the projections, where it re-evaluates the
+        whole inlined minhash tree per row (measured 4× on the index
+        build)."""
+        return (sig.select("id", *keep, F.explode(F.array(
+                    *[f"__bk{b}" for b in range(bands)])).alias("bk"))
+                .withColumn("bucket",
+                            F.pmod(F.xxhash64("bk"), F.lit(n_buckets))))
 
     def create_dedup_index(self, text_col: str = "text",
                            id_col: str | None = None, k: int = 16,
@@ -4044,10 +4056,10 @@ class Table:
         # snapshot: a commit racing the build must leave the persisted
         # pin stale (next refresh picks it up), never falsely fresh
         tok = self._snapshot_token()
-        rows = self._dedup_band_rows(
+        rows = self._dedup_band_rows(self._dedup_band_keys(
             self.read(snapshot_id=tok["snapshot_id"],
                       projection=[id_col, text_col]),
-            id_col, text_col, k, bands, n, n_buckets)
+            id_col, text_col, k, bands, n), bands, n_buckets)
         out = self._dedup_index_dir(text_col)
         shutil.rmtree(out, ignore_errors=True)
         # one shuffle keyed on bucket → exactly one file per bucket
@@ -4088,10 +4100,10 @@ class Table:
                                     meta["bands"], meta["n"],
                                     meta["n_buckets"])
             return "rebuilt"
-        rows = self._dedup_band_rows(
+        rows = self._dedup_band_rows(self._dedup_band_keys(
             delta.select(meta["id_col"], text_col), meta["id_col"],
-            text_col, meta["k"], meta["bands"], meta["n"],
-            meta["n_buckets"])
+            text_col, meta["k"], meta["bands"], meta["n"]),
+            meta["bands"], meta["n_buckets"])
         out = self._dedup_index_dir(text_col)
         pre = set(self._index_files(out))
         rows.repartition(meta["n_buckets"], "bucket") \
@@ -4112,12 +4124,24 @@ class Table:
         """Incremental near-dup candidates for a NEW batch of documents:
         (new_id, dup_of, src) where src='corpus' pairs the batch against
         the persisted index (bucket-pruned to the batch's own band
-        buckets) and src='batch' are within-batch LSH pairs
-        (minhash_lsh_pairs, id_a < id_b as new_id > dup_of). A stale or
-        missing index falls back to banding the corpus on the fly —
+        buckets) and src='batch' are within-batch LSH pairs (id_a < id_b
+        reported as new_id > dup_of; exactly `minhash_lsh_pairs` of the
+        batch, exact-copy groups chained to their min-id rep). A stale
+        or missing index falls back to banding the corpus on the fly —
         slower, never wrong. With `verify_jaccard`, candidates join
         their texts and only pairs with n-gram Jaccard ≥ the threshold
-        survive (exact verify on candidates only — never all-pairs)."""
+        survive (exact verify on candidates only — never all-pairs).
+
+        The batch is processed ONCE: one projection gives every new
+        document its exact-copy rep (min id over md5(text)), its band
+        keys and (when verifying) its shingle array, checkpointed
+        eagerly; corpus pairs, batch pairs and the batch side of verify
+        all read that checkpoint. Nothing is left in the cache."""
+        from pyspark.sql import Window
+
+        from paimon_spark.functions.dedup import (
+            _ckpt_no_constraints, jaccard_shingles, shingles_from_tokens)
+        from paimon_spark.functions.text import tokens
         meta = self.dedup_index_meta(text_col)
         if meta is not None:
             id_col = id_col or meta["id_col"]
@@ -4126,8 +4150,17 @@ class Table:
         else:
             id_col = id_col or self.schema.field_names[0]
             k, bands, n, n_buckets = 16, 4, 3, 64
-        nb = self._dedup_band_rows(new_docs, id_col, text_col,
-                                   k, bands, n, n_buckets).persist()
+        # __rep: min id of each exact-copy group — one content-hash
+        # window, as in minhash_lsh_pairs' hot-bucket guard. The
+        # checkpoint carries no origin constraints, so the batch-pair
+        # union below is safe on non-nullable sources.
+        docs = new_docs.select(F.col(id_col), F.col(text_col)).withColumn(
+            "__rep", F.min(id_col).over(Window.partitionBy(
+                F.md5(F.encode(F.col(text_col), "UTF-8")))))
+        sig = _ckpt_no_constraints(self._dedup_band_keys(
+            docs, id_col, text_col, k, bands, n, ("__rep",),
+            "__s" if verify_jaccard is not None else None))
+        nb = self._dedup_band_rows(sig, bands, n_buckets, "__rep")
         fresh = self._index_current(meta)
         if fresh:
             root = self._dedup_index_dir(text_col)
@@ -4140,9 +4173,9 @@ class Table:
                    .parquet(*self._index_read_paths(root, meta)))
             idx = self._static_bucket_prune(idx, nb, root, meta)
         else:
-            idx = self._dedup_band_rows(
+            idx = self._dedup_band_rows(self._dedup_band_keys(
                 self.read(projection=[id_col, text_col]), id_col,
-                text_col, k, bands, n, n_buckets)
+                text_col, k, bands, n), bands, n_buckets)
         # join on (bk, bucket) with the batch side BROADCAST: bucket is
         # implied by bk (pmod of its hash) so it adds nothing logically,
         # but it is the index's partition column — Spark's dynamic
@@ -4156,73 +4189,35 @@ class Table:
                                       "bk", "bucket")), ["bk", "bucket"])
                         .filter(F.col("new_id") != F.col("dup_of"))
                         .select("new_id", "dup_of").distinct()
-                        .withColumn("src", F.lit("corpus")).persist())
+                        .withColumn("src", F.lit("corpus")))
         bp = None
         if include_batch_pairs:
-            from paimon_spark.functions.dedup import minhash_lsh_pairs
-            bp = (minhash_lsh_pairs(new_docs, id_col, text_col, k,
-                                    bands, n)
-                  .select(F.col("id_b").alias("new_id"),
-                          F.col("id_a").alias("dup_of"))
-                  .withColumn("src", F.lit("batch")).persist())
+            # within-batch LSH pairs among the reps (the batch is one
+            # ingest increment — broadcast), plus one (rep, member)
+            # chain pair per exact copy; ONE distinct dedupes the
+            # multi-band collisions and the disjoint chain branch
+            reps = nb.filter(F.col("id") == F.col("__rep"))
+            a = reps.select(F.col("id").alias("dup_of"), "bk")
+            b = reps.select(F.col("id").alias("new_id"), "bk")
+            chain = sig.filter(F.col("id") != F.col("__rep")).select(
+                F.col("id").alias("new_id"), F.col("__rep").alias("dup_of"))
+            bp = (a.join(F.broadcast(b), "bk")
+                  .filter(F.col("dup_of") < F.col("new_id"))
+                  .select("new_id", "dup_of").unionByName(chain)
+                  .distinct().withColumn("src", F.lit("batch")))
         if verify_jaccard is None:
             return corpus_pairs if bp is None \
                 else corpus_pairs.unionByName(bp)
-        from paimon_spark.functions.dedup import (
-            jaccard_shingles, shingles_from_tokens)
-        from paimon_spark.functions.text import tokens
 
-        def _shingled(df, out_id, src_id, src_txt):
-            # tokens and shingles in their OWN projections (each
-            # referenced >1 time downstream ⇒ CollapseProject keeps the
-            # stage); inlining them into the jaccard lambdas would
-            # re-evaluate the whole shingle build per array element,
-            # interpreted — measured 20 s for 88 candidate pairs at
-            # sf0.1 vs ~1 s for this shape.
-            a = df.select(F.col(src_id).alias(out_id),
-                          tokens(F.col(src_txt)).alias("__tk"))
-            return a.select(out_id, shingles_from_tokens(F.col("__tk"),
-                                                         n).alias("__s"))
-
-        # batch shingles once (the batch is one ingest increment —
-        # small); corpus shingles only for rows that are candidates:
-        # semi-restrict by broadcast candidate ids, so the corpus pays
-        # scan + broadcast-probe ONLY, never a corpus-wide shingle
-        # array or an Exchange.
-        nbs = _shingled(new_docs, "new_id", id_col, text_col) \
-            .withColumnRenamed("__s", "__sa")
-
-        def _verify(pairs, right_raw, restrict):
-            # the candidate set is THRESHOLD-dependent, not batch-
-            # dependent: a loose threshold on a dense near-dup corpus
-            # can make it arbitrarily large, and its rows carry full
-            # shingle arrays — broadcast only below the gate, shuffle
-            # join above it (VERDICT r9 #5). The limit-probe count
-            # short-circuits as soon as the cap is exceeded.
-            hint = F.broadcast
-            if restrict:
-                ids = pairs.select("dup_of").distinct()
-                cap = self._VERIFY_BROADCAST_MAX_IDS
-                # candidate ids ⊆ index ids: a footer-derived bound under
-                # the cap proves broadcast-safety with zero Spark jobs
-                bound = (self._index_rows_upper_bound(
-                    self._dedup_index_dir(text_col), meta)
-                    if fresh else None)
-                if bound is not None and bound <= cap:
-                    pass
-                elif ids.limit(cap + 1).count() > cap:
-                    hint = lambda d: d                      # noqa: E731
-                right_raw = right_raw.join(
-                    hint(ids),
-                    right_raw[id_col] == ids["dup_of"], "left_semi")
-            rs = _shingled(right_raw, "dup_of", id_col, text_col) \
-                .withColumnRenamed("__s", "__sb")
+        def _verify(pairs, rs, hint):
             # pairs ⨝ broadcast(shingled sides): the ≥-threshold filter
-            # Catalyst pushes into the join condition now references
+            # Catalyst pushes into the join condition references
             # MATERIALIZED arrays, not the shingle-build expressions.
-            # nbs (the batch side) stays broadcast — it is one ingest
+            # The batch side stays broadcast — it is one ingest
             # increment by contract, bounded by the caller's batch size.
-            return (pairs.join(F.broadcast(nbs), "new_id")
+            return (pairs.join(F.broadcast(sig.select(
+                        F.col("id").alias("new_id"),
+                        F.col("__s").alias("__sa"))), "new_id")
                     .join(hint(rs), "dup_of")
                     .withColumn("jaccard", F.round(
                         jaccard_shingles(F.col("__sa"), F.col("__sb")),
@@ -4230,10 +4225,43 @@ class Table:
                     .filter(F.col("jaccard") >= verify_jaccard)
                     .select("new_id", "dup_of", "src", "jaccard"))
 
-        out = _verify(corpus_pairs,
-                      self.read(projection=[id_col, text_col]), True)
+        # corpus shingles only for rows that are candidates: semi-
+        # restrict by broadcast candidate ids, so the corpus pays scan +
+        # broadcast-probe ONLY, never a corpus-wide shingle array or an
+        # Exchange. The candidate set is THRESHOLD-dependent, not batch-
+        # dependent: a loose threshold on a dense near-dup corpus can
+        # make it arbitrarily large, and its rows carry full shingle
+        # arrays — broadcast only below the gate, shuffle join above
+        # it. The limit-probe count short-circuits as soon as the cap is
+        # exceeded.
+        hint = F.broadcast
+        ids = corpus_pairs.select("dup_of").distinct()
+        cap = self._VERIFY_BROADCAST_MAX_IDS
+        # candidate ids ⊆ index ids: a footer-derived bound under the
+        # cap proves broadcast-safety with zero Spark jobs
+        bound = (self._index_rows_upper_bound(
+            self._dedup_index_dir(text_col), meta) if fresh else None)
+        if bound is not None and bound <= cap:
+            pass
+        elif ids.limit(cap + 1).count() > cap:
+            hint = lambda d: d                              # noqa: E731
+        corpus = self.read(projection=[id_col, text_col])
+        corpus = corpus.join(hint(ids), corpus[id_col] == ids["dup_of"],
+                             "left_semi")
+        # tokens and shingles in their OWN projections (each referenced
+        # >1 time downstream ⇒ CollapseProject keeps the stage);
+        # inlining them into the jaccard lambdas would re-evaluate the
+        # whole shingle build per array element, interpreted — measured
+        # 20 s for 88 candidate pairs at sf0.1 vs ~1 s for this shape.
+        rs = (corpus.select(F.col(id_col).alias("dup_of"),
+                            tokens(F.col(text_col)).alias("__tk"))
+              .select("dup_of", shingles_from_tokens(
+                  F.col("__tk"), n).alias("__sb")))
+        out = _verify(corpus_pairs, rs, hint)
         if bp is not None:
-            out = out.unionByName(_verify(bp, new_docs, False))
+            out = out.unionByName(_verify(bp, sig.select(
+                F.col("id").alias("dup_of"), F.col("__s").alias("__sb")),
+                F.broadcast))
         return out
 
     _INDEX_PRUNE_BYTES = 256 << 20
@@ -4281,7 +4309,7 @@ class Table:
         """Bucket-prune a persisted band index with the batch's own
         bucket set when the index is big enough for the extra driver
         round-trip to pay (≤ n_buckets scalars collected from the
-        already-persisted batch band rows). Below the size gate the
+        already-checkpointed batch band rows). Below the size gate the
         unpruned scan is cheaper than the collect job; the (bk, bucket)
         join shape stays eligible for Spark's dynamic partition pruning
         either way (measured: DPP's benefit heuristic declines without
@@ -4425,6 +4453,7 @@ class Table:
         never wrong. With `threshold`, candidates join their vectors
         and only pairs with exact cosine ≥ threshold survive, returned
         with `score` — verify on candidates only."""
+        from paimon_spark.functions.dedup import _ckpt_no_constraints
         from paimon_spark.functions.similarity import (
             cos_div, dot, embedding_near_dup, norm)
         meta = self.embedding_dedup_index_meta(vec_col)
@@ -4435,9 +4464,11 @@ class Table:
         else:
             id_col = id_col or self.schema.field_names[0]
             n_planes, band_bits, dim, n_buckets = 16, 4, 64, 16
-        nb_rows = self._embedding_band_rows(
+        # the batch's band rows feed the bucket prune and the corpus
+        # join: checkpointed eagerly, so nothing is left in the cache
+        nb_rows = _ckpt_no_constraints(self._embedding_band_rows(
             new_vecs, id_col, vec_col, n_planes, band_bits, dim,
-            n_buckets).persist()
+            n_buckets))
         fresh = self._index_current(meta)
         if fresh:
             root = self._embedding_dedup_index_dir(vec_col)
@@ -4465,7 +4496,7 @@ class Table:
                             ["bk", "bucket"])
                         .filter(F.col("new_id") != F.col("dup_of"))
                         .select("new_id", "dup_of").distinct()
-                        .withColumn("src", F.lit("corpus")).persist())
+                        .withColumn("src", F.lit("corpus")))
         bp = None
         if include_batch_pairs:
             # threshold=-2.0 keeps every candidate (cosine ≥ -1), so

@@ -416,6 +416,126 @@ def test_dedup_index_incremental(spark, wh, tmp_path):
     assert t.refresh_dedup_index() == "rebuilt"
 
 
+def _exact_jaccard(a, b, n=3):
+    """Exact word n-gram shingle Jaccard, built as the engine builds
+    shingles: lowercase alphanumeric tokens, the whole text if shorter
+    than n tokens."""
+    import re
+
+    def sh(x):
+        t = [w for w in re.split("[^a-z0-9]+", x.lower()) if w]
+        return {" ".join(t[i:i + n]) for i in range(max(len(t) - n + 1, 1))}
+    sa, sb = sh(a), sh(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+def test_dedup_against_index_matches_reference_paths(spark, wh):
+    """The candidate query processes the batch once; its three outputs
+    are pinned to independent paths: src='batch' rows equal
+    minhash_lsh_pairs of the batch, src='corpus' rows equal the
+    index-free fallback, and verify_jaccard rows equal exact shingle
+    Jaccard. The batch covers exact-copy groups (inside the batch and
+    against the corpus), one-word near copies, a text shorter than n
+    tokens, NULL texts, and a non-nullable createDataFrame source (the
+    shape that once crashed Spark's UnionBase.rewriteConstraints)."""
+    import random
+    import shutil
+
+    from paimon_spark.functions.dedup import minhash_lsh_pairs
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(150)]
+
+    def doc(words=30):
+        return [rng.choice(vocab) for _ in range(words)]
+
+    def near(words):
+        w = list(words)
+        w[len(w) // 2] = "replaced"
+        return " ".join(w)
+
+    corpus = [(i, " ".join(doc())) for i in range(40)]
+    t = Table.create(f"{wh}/ddref", SCH, spark=spark)
+    t.append(spark.createDataFrame(corpus, SCH))
+    t.create_dedup_index(n_buckets=8)
+    same, own = " ".join(doc()), doc()
+    batch = [(1000, same), (1001, same), (1002, same),
+             (1003, corpus[5][1]),
+             (1004, near(corpus[7][1].split())),
+             (1005, near(own)), (1006, " ".join(own)),
+             (1007, "two Words"),
+             (1008, None), (1009, None),
+             *[(1010 + i, " ".join(doc())) for i in range(6)]]
+    texts = dict(corpus + batch)
+    nullable_ids = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("text", T.StringType())])
+    strict = T.StructType([T.StructField("id", T.LongType(), False),
+                           T.StructField("text", T.StringType(), False)])
+    sources = [spark.createDataFrame(batch, nullable_ids),
+               spark.createDataFrame(
+                   [r for r in batch if r[1] is not None], strict)]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    indexed = []
+    for new in sources:
+        got = rows(t.dedup_against_index(new))
+        indexed.append(got)
+        verified = rows(t.dedup_against_index(new, verify_jaccard=0.5))
+        lsh = {(r.id_b, r.id_a) for r in
+               minhash_lsh_pairs(new, "id", "text", 16, 4, 3).collect()}
+        assert {(a, b) for a, b, s in got if s == "batch"} == lsh
+        expected = {(a, b, s) for a, b, s in got
+                    if texts[a] is not None and texts[b] is not None
+                    and _exact_jaccard(texts[a], texts[b]) >= 0.5}
+        assert len(set(got)) == len(got)
+        assert sorted((a, b, s) for a, b, s, _ in verified) == \
+            sorted(expected)
+        assert all(abs(j - _exact_jaccard(texts[a], texts[b])) < 1e-4
+                   for a, b, _, j in verified)
+    # every planted shape reached the reference paths
+    assert {(1001, 1000, "batch"), (1002, 1000, "batch"),
+            (1009, 1008, "batch"), (1003, 5, "corpus"),
+            (1004, 7, "corpus"), (1006, 1005, "batch")} <= set(indexed[0])
+    # index-free fallback: identical corpus rows
+    shutil.rmtree(t._dedup_index_dir("text"))
+    for new, got in zip(sources, indexed):
+        assert [r for r in rows(t.dedup_against_index(new))
+                if r[2] == "corpus"] == [r for r in got if r[2] == "corpus"]
+
+
+def test_dedup_candidate_queries_leave_no_cache(spark, wh):
+    """The MinHash candidate query (with and without verify) and the
+    embedding one leave nothing in Spark's CacheManager: a query that
+    persists its intermediates and never unpersists them grows the
+    cache by a few entries per ingest batch, forever."""
+    import random
+    t = Table.create(f"{wh}/ddcache", SCH, spark=spark)
+    t.append(spark.createDataFrame(DOCS, SCH))
+    t.create_dedup_index(n_buckets=8)
+    new = spark.createDataFrame(
+        [(10, DOCS[0][1]), (11, DOCS[0][1]), (12, "quick data engines")],
+        SCH)
+    rng = random.Random(3)
+    vsch = T.StructType([T.StructField("vec_id", T.LongType()),
+                         T.StructField("embedding",
+                                       T.ArrayType(T.FloatType()))])
+    vecs = [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(60)]
+    te = Table.create(f"{wh}/vecache", vsch, spark=spark)
+    te.append(spark.createDataFrame(vecs[:50], vsch))
+    te.create_embedding_dedup_index()
+    new_vecs = spark.createDataFrame(vecs[50:] + [(60, vecs[0][1])], vsch)
+    spark.catalog.clearCache()
+    t.dedup_against_index(new).collect()
+    t.dedup_against_index(new, verify_jaccard=0.5).collect()
+    te.dedup_embeddings_against_index(
+        new_vecs, include_batch_pairs=False).collect()
+    te.dedup_embeddings_against_index(
+        new_vecs, include_batch_pairs=False, threshold=0.4).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_embedding_dedup_index_incremental(spark, wh):
     """Persisted sign-LSH band index over embeddings (r9): create →
     delta refresh → bucket-pruned incremental near-dup of a new vector
