@@ -2550,24 +2550,101 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordering contract: the driver gates the FIRST 50 entries each round.
-    r13 window (VERDICT r12 #3 + ADVICE marker fix — the r12 marker sat
-    at position 51, so q19_disjunctive_revenue recorded as gated but
-    fell outside the driver's window): the r13-NEW
-    changelog_input_window leads, then the 14 r10-gated entries that
-    missed the r12 window (q19_disjunctive_revenue …
-    audit_log_counts, last driver-attested in r10), then the first 35
-    of the r11-gated set re-attest (image_near_dup … text_quality).
-    The 15 remaining r11-gated entries spill just below and lead the
-    r14 window; the 50 r12-gated entries (all green in
-    CORRECTNESS_r12) rotate to the bottom. ALL entries — gated or not
-    — are oracle-checked every round by tests/test_oracle_parity.py
-    (sf0.001) and tools/check_oracle.py (sf0.01)."""
+    """Ordering contract: the driver gates the FIRST 50 entries each
+    round, so the order decides which queries it attests.
+    Current window:
+    - six entries the r13-r14 optimisation rounds restructured and the
+      driver has not attested since (pipeline_curated_corpus …
+      zorder_cluster_preserves) lead;
+    - the two dedup-index queries whose shared band-key index
+      implementation changed last (dedup_incremental_index,
+      dedup_embedding_incremental) follow;
+    - then the 13 remaining r11-gated entries that sat just below the
+      cut-off since r13 (text_stats … dedup_simhash);
+    - then the first 29 of the r12-gated entries (url_canonical_dedup …
+      sql_dml_roundtrip), which have not been in the window since r12.
+    The rest of the r12-gated set spills just below and leads the next
+    window; the r13 window (changelog_input_window, the r10 and r11
+    re-attests) rotates to the bottom. ALL entries — gated or not — are
+    oracle-checked every round by tests/test_oracle_parity.py (sf0.001)
+    and tools/check_oracle.py (sf0.01)."""
     return {
-        # --- r13 gate window ---------------------------------------------
-        # r13-new: input-producer decoupled changelog window
+        # --- gate window ---------------------------------------------
+        # restructured in r13-r14, unattested since
+        "pipeline_curated_corpus": pipeline_curated_corpus,
+        "soft_dedup_weights": soft_dedup_weights,
+        "ngram_lm_score": ngram_lm_score,
+        "pipeline_clean_corpus": pipeline_clean_corpus,
+        "iceberg_dv_mirror_read": iceberg_dv_mirror_read,
+        "zorder_cluster_preserves": zorder_cluster_preserves,
+        # restructured with the shared band-key index
+        "dedup_incremental_index": dedup_incremental_index,
+        "dedup_embedding_incremental": dedup_embedding_incremental,
+        # remaining r11-gated entries (below the cut-off since r13)
+        "text_stats": text_stats,
+        "text_langid": text_langid,
+        "text_repetition": text_repetition,
+        "text_chunks": text_chunks,
+        "sketch_hll_users": sketch_hll_users,
+        "variant_extract": variant_extract,
+        "stream_window_counts": stream_window_counts,
+        "window_user_ranks": window_user_ranks,
+        "pii_redact": pii_redact,
+        "contamination_4gram": contamination_4gram,
+        "bitmap_rowrange_lang": bitmap_rowrange_lang,
+        "multimodal_bytes_meta": multimodal_bytes_meta,
+        "dedup_simhash": dedup_simhash,
+        # r12-gated entries, first 29
+        "url_canonical_dedup": url_canonical_dedup,
+        "boilerplate_scrub": boilerplate_scrub,
+        "gopher_quality": gopher_quality,
+        "changelog_decoupled_window": changelog_decoupled_window,
+        "sample_corpus": sample_corpus,
+        "q3_top_revenue": q3_top_revenue,
+        "q21_waiting_suppliers": q21_waiting_suppliers,
+        "topn_orders": topn_orders,
+        "point_lookup": point_lookup,
+        "metadata_count": metadata_count,
+        "agg_engine_rich": agg_engine_rich,
+        "changelog_old_vs_new": changelog_old_vs_new,
+        "pk_after_delete": pk_after_delete,
+        "cross_partition_upsert": cross_partition_upsert,
+        "bucketed_mirror_read": bucketed_mirror_read,
+        "audio_frame_energy": audio_frame_energy,
+        "time_travel_v1": time_travel_v1,
+        "sequence_field_latest": sequence_field_latest,
+        "default_values_read": default_values_read,
+        "tag_travel_read": tag_travel_read,
+        "mixture_token_budget": mixture_token_budget,
+        "winnow_doc_fingerprints": winnow_doc_fingerprints,
+        "dedup_exact": dedup_exact,
+        "embedding_quantize": embedding_quantize,
+        "sql_function_charge": sql_function_charge,
+        "datasource_write_pk": datasource_write_pk,
+        "imv_user_totals": imv_user_totals,
+        "merge_into_append": merge_into_append,
+        "sql_dml_roundtrip": sql_dml_roundtrip,
+        # =========== gate cut-off (first 50 above) ======================
+        # the remaining r12-gated entries: they lead the next window
+        "metadata_minmax": metadata_minmax,
+        "transform_year_filter": transform_year_filter,
+        "q5_region_revenue": q5_region_revenue,
+        "q4_late_orders": q4_late_orders,
+        "q10_returned_revenue": q10_returned_revenue,
+        "q12_priority_class": q12_priority_class,
+        "q14_promo_share": q14_promo_share,
+        "q18_big_orders": q18_big_orders,
+        "rollup_pricing": rollup_pricing,
+        "q7_nation_volume": q7_nation_volume,
+        "q8_market_share": q8_market_share,
+        "q9_product_profit": q9_product_profit,
+        "q11_important_parts": q11_important_parts,
+        "q13_customer_orders": q13_customer_orders,
+        "q15_top_supplier": q15_top_supplier,
+        "q16_brand_suppliers": q16_brand_suppliers,
+        "q17_small_quantity_revenue": q17_small_quantity_revenue,
+        # --- the r13 window (r13-new, r10 and r11 re-attests) ----------
         "changelog_input_window": changelog_input_window,
-        # the 14 r10-gated entries that missed the r12 window
         "q19_disjunctive_revenue": q19_disjunctive_revenue,
         "q22_idle_customers": q22_idle_customers,
         "q2_min_cost_supplier": q2_min_cost_supplier,
@@ -2582,7 +2659,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "clustered_write_prune": clustered_write_prune,
         "blob_roundtrip": blob_roundtrip,
         "audit_log_counts": audit_log_counts,
-        # r11-gated entries re-attesting (first 36 fit)
         "image_near_dup": image_near_dup,
         "agg_engine_user_stats": agg_engine_user_stats,
         "partial_update_orders": partial_update_orders,
@@ -2596,8 +2672,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ngram_jaccard_pairs": ngram_jaccard_pairs,
         "stream_patched_followup": stream_patched_followup,
         "chain_stream_phase1": chain_stream_phase1,
-        "dedup_incremental_index": dedup_incremental_index,
-        "dedup_embedding_incremental": dedup_embedding_incremental,
         "stream_patched_drain": stream_patched_drain,
         "incremental_patched_images": incremental_patched_images,
         "q1_pricing_summary": q1_pricing_summary,
@@ -2618,74 +2692,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_centroid_classify": embedding_centroid_classify,
         "ann_ivf_topk": ann_ivf_topk,
         "text_quality": text_quality,
-        # =========== gate cut-off (first 50 above) ======================
-        # the 15 remaining r11-gated entries: they lead the r14 window
-        "text_stats": text_stats,
-        "text_langid": text_langid,
-        "text_repetition": text_repetition,
-        "text_chunks": text_chunks,
-        "sketch_hll_users": sketch_hll_users,
-        "variant_extract": variant_extract,
-        "stream_window_counts": stream_window_counts,
-        "window_user_ranks": window_user_ranks,
-        "pii_redact": pii_redact,
-        "contamination_4gram": contamination_4gram,
-        "bitmap_rowrange_lang": bitmap_rowrange_lang,
-        "multimodal_bytes_meta": multimodal_bytes_meta,
-        "dedup_simhash": dedup_simhash,
-        "zorder_cluster_preserves": zorder_cluster_preserves,
-        "iceberg_dv_mirror_read": iceberg_dv_mirror_read,
-        # --- entries below were gated GREEN in r12 (CORRECTNESS_r12) ----
-        "url_canonical_dedup": url_canonical_dedup,
-        "boilerplate_scrub": boilerplate_scrub,
-        "gopher_quality": gopher_quality,
-        "changelog_decoupled_window": changelog_decoupled_window,
-        "sample_corpus": sample_corpus,
-        "q3_top_revenue": q3_top_revenue,
-        "q21_waiting_suppliers": q21_waiting_suppliers,
-        "pipeline_clean_corpus": pipeline_clean_corpus,
-        "topn_orders": topn_orders,
-        "point_lookup": point_lookup,
-        "metadata_count": metadata_count,
-        "agg_engine_rich": agg_engine_rich,
-        "changelog_old_vs_new": changelog_old_vs_new,
-        "pk_after_delete": pk_after_delete,
-        "cross_partition_upsert": cross_partition_upsert,
-        "bucketed_mirror_read": bucketed_mirror_read,
-        "soft_dedup_weights": soft_dedup_weights,
-        "ngram_lm_score": ngram_lm_score,
-        "audio_frame_energy": audio_frame_energy,
-        "pipeline_curated_corpus": pipeline_curated_corpus,
-        "time_travel_v1": time_travel_v1,
-        "sequence_field_latest": sequence_field_latest,
-        "default_values_read": default_values_read,
-        "tag_travel_read": tag_travel_read,
-        "mixture_token_budget": mixture_token_budget,
-        "winnow_doc_fingerprints": winnow_doc_fingerprints,
-        "dedup_exact": dedup_exact,
-        "embedding_quantize": embedding_quantize,
-        "sql_function_charge": sql_function_charge,
-        "datasource_write_pk": datasource_write_pk,
-        "imv_user_totals": imv_user_totals,
-        "merge_into_append": merge_into_append,
-        "sql_dml_roundtrip": sql_dml_roundtrip,
-        "metadata_minmax": metadata_minmax,
-        "transform_year_filter": transform_year_filter,
-        "q5_region_revenue": q5_region_revenue,
-        "q4_late_orders": q4_late_orders,
-        "q10_returned_revenue": q10_returned_revenue,
-        "q12_priority_class": q12_priority_class,
-        "q14_promo_share": q14_promo_share,
-        "q18_big_orders": q18_big_orders,
-        "rollup_pricing": rollup_pricing,
-        "q7_nation_volume": q7_nation_volume,
-        "q8_market_share": q8_market_share,
-        "q9_product_profit": q9_product_profit,
-        "q11_important_parts": q11_important_parts,
-        "q13_customer_orders": q13_customer_orders,
-        "q15_top_supplier": q15_top_supplier,
-        "q16_brand_suppliers": q16_brand_suppliers,
-        "q17_small_quantity_revenue": q17_small_quantity_revenue,
     }
 
 

@@ -15,7 +15,11 @@ dedup against a persisted band index (`Table.dedup_against_index`)
 touches each new batch once: one checkpointed projection (exact-copy
 rep, shingles, band keys) feeds the corpus join, the within-batch pairs
 and the batch side of verify; the corpus is shingled only for candidate
-ids and never re-banded while the index is fresh.
+ids and never re-banded while the index is fresh. The index itself —
+build, refresh, corpus candidate join, verify broadcast gate — is one
+band-key implementation on `Table` shared with the sign-LSH embedding
+index; this module supplies only its band keys (`with_minhash`,
+`band_keys`).
 """
 
 from __future__ import annotations

@@ -2491,8 +2491,7 @@ class Table:
             # indexed query to the on-the-fly fallback)
             segs = rel.split(os.sep)
             if segs[0] == "index" and len(segs) >= 2 and \
-                    segs[1] in ("vector", "fulltext", "dedup",
-                                "dedup_vec"):
+                    segs[1] in self._INDEX_FAMILIES:
                 continue
             # bucketed mirrors are Spark-managed COPIES keyed in the
             # session catalog — pruning their parts would silently
@@ -3179,7 +3178,7 @@ class Table:
                     or max(2, len(ranked) // 8)
             nprobe = max(1, min(int(nprobe), len(ranked)))
             probes = [i for i, _ in ranked[:nprobe]]
-            root = self._vector_index_dir(vec_col)
+            root = self._index_dir("vector", vec_col)
             paths = self._index_read_paths(root, meta)
             if not paths:
                 return self.vector_search(query, k, vec_col, "brute")
@@ -3240,9 +3239,6 @@ class Table:
     # ------- persisted vector index (≈ CreateGlobalIndexProcedure +
     #         VectorSearchTable's index-backed path) -------
 
-    def _vector_index_dir(self, vec_col: str) -> str:
-        return os.path.join(self.paths.meta_root, "index", "vector", vec_col)
-
     def create_vector_index(self, vec_col: str = "embedding",
                             id_col: str | None = None,
                             n_centroids: int | None = None,
@@ -3296,7 +3292,7 @@ class Table:
                        "codes", pq_encode(F.col("vec"), books, self.spark))
                    .drop("vec"))
             pq = {"m": pq_m, "codebooks": books}
-        out = self._vector_index_dir(vec_col)
+        out = self._index_dir("vector", vec_col)
         shutil.rmtree(out, ignore_errors=True)
         inv.write.partitionBy("cluster").parquet(out)
         files = self._index_files(out)
@@ -3361,21 +3357,19 @@ class Table:
         if self._index_current(meta):
             return "fresh"
         id_col = meta["id_col"]
-        out = self._vector_index_dir(vec_col)
-        delta = self._index_delta(meta["snapshot_id"] or 0,
-                                  meta.get("snapshot_ts"),
-                                  to_snapshot=tok["snapshot_id"])
-        retr_ids = None
+        out = self._index_dir("vector", vec_col)
+        delta = self._index_delta(meta, tok)
+        retr_ids = cl = None
         n_retr = 0
         if delta is None and self.schema.is_pk_table:
             # changelog-driven refresh over PK history: tombstone changed
             # keys' old list entries, append the new versions (same
             # generational scheme as _refresh_text_index_pk)
-            cl = self._index_changelog_delta(
-                meta["snapshot_id"] or 0, meta.get("snapshot_ts"),
-                to_snapshot=tok["snapshot_id"])
+            cl = self._index_changelog_delta(meta, tok)
+        if cl is not None:
+            cl = cl.persist()
+        try:
             if cl is not None:
-                cl = cl.persist()
                 agg = cl.agg(
                     F.sum(F.when(F.col(KIND_COL).isin("-U", "-D"), 1)
                           .otherwise(0)).alias("n_retr"),
@@ -3384,80 +3378,65 @@ class Table:
                     F.sum(F.when(F.col(KIND_COL) == "-D", 1)
                           .otherwise(0)).alias("n_del")).collect()[0]
                 n_retr = int(agg["n_retr"] or 0)
-                # legacy metas without n_rows rebuild on first retraction
-                # (safe: the rebuild stamps n_rows for the next refresh)
+                # past the retraction fraction delta stays None and the
+                # index rebuilds below; legacy metas without n_rows
+                # rebuild on first retraction (safe: the rebuild stamps
+                # n_rows for the next refresh)
                 if (meta.get("retracted", 0) + n_retr
-                        > self._INDEX_REBUILD_RETRACT_FRACTION
+                        <= self._INDEX_REBUILD_RETRACT_FRACTION
                         * max(int(meta.get("n_rows", 0)) or 1, 1)):
-                    cl.unpersist()
-                    self.create_vector_index(
-                        vec_col, id_col, meta["n_centroids"],
-                        spill=meta.get("spill"),
-                        pq_m=(meta.get("pq") or {}).get("m", 0))
-                    return "rebuilt"
-                meta["n_rows"] = (int(meta.get("n_rows", 0))
-                                  + int(agg["n_ins"] or 0)
-                                  - int(agg["n_del"] or 0))
-                retr_ids = cl.filter(F.col(KIND_COL).isin("-U", "-D")) \
-                             .select(F.col(id_col).alias("id"))
-                delta = cl.filter(F.col(KIND_COL).isin("+I", "+U"))
-        if delta is None:
-            self.create_vector_index(vec_col, meta["id_col"],
-                                     meta["n_centroids"],
-                                     spill=meta.get("spill"),
-                                     pq_m=(meta.get("pq") or {}).get(
-                                         "m", 0))
-            return "rebuilt"
-        gen = int(meta.get("generation", 0)) + (1 if retr_ids is not None
-                                                else 0)
-        pre = set(self._index_files(out))
-        new_r: list[str] = []
-        if retr_ids is not None and n_retr:
-            new_r = self._write_index_retractions(out, retr_ids, gen)
-        inv = self._assign_vector_clusters(
-            delta.select(id_col, vec_col), meta["centroids"], id_col,
-            vec_col, spill=int(meta.get("spill") or 0))
-        if meta.get("pq"):
-            # incremental adds encode with the EXISTING codebooks —
-            # codes stay comparable across the whole index
-            from paimon_spark.functions.similarity import pq_encode
-            inv = (inv.withColumn(
-                       "codes",
-                       pq_encode(F.col("vec"),
-                                 meta["pq"]["codebooks"], self.spark))
-                   .drop("vec"))
-        inv.write.mode("append").partitionBy("cluster").parquet(out)
-        new = [f for f in self._index_files(out) if f not in pre]
-        fgens = dict(meta.get("file_gens") or {})
-        fgens.update({f: gen for f in new})
-        meta.update({**tok,
-                     "generation": gen,
-                     "files": sorted(meta.get("files",
-                                              sorted(pre)) + new),
-                     "file_gens": fgens,
-                     "retraction_files": sorted(
-                         (meta.get("retraction_files") or []) + new_r),
-                     "retracted": int(meta.get("retracted", 0)) + n_retr})
-        self._write_index_meta(out, meta)
-        return "incremental"
+                    meta["n_rows"] = (int(meta.get("n_rows", 0))
+                                      + int(agg["n_ins"] or 0)
+                                      - int(agg["n_del"] or 0))
+                    retr_ids = cl.filter(
+                        F.col(KIND_COL).isin("-U", "-D")).select(
+                        F.col(id_col).alias("id"))
+                    delta = cl.filter(F.col(KIND_COL).isin("+I", "+U"))
+            if delta is None:
+                self.create_vector_index(
+                    vec_col, id_col, meta["n_centroids"],
+                    spill=meta.get("spill"),
+                    pq_m=(meta.get("pq") or {}).get("m", 0))
+                return "rebuilt"
+            gen = int(meta.get("generation", 0)) + (
+                1 if retr_ids is not None else 0)
+            new_r: list[str] = []
+            if retr_ids is not None and n_retr:
+                new_r = self._write_index_retractions(out, retr_ids, gen)
+            inv = self._assign_vector_clusters(
+                delta.select(id_col, vec_col), meta["centroids"], id_col,
+                vec_col, spill=int(meta.get("spill") or 0))
+            if meta.get("pq"):
+                # incremental adds encode with the EXISTING codebooks —
+                # codes stay comparable across the whole index
+                from paimon_spark.functions.similarity import pq_encode
+                inv = (inv.withColumn(
+                           "codes",
+                           pq_encode(F.col("vec"),
+                                     meta["pq"]["codebooks"], self.spark))
+                       .drop("vec"))
+            self._append_index(out, meta, inv, "cluster", gen)
+            meta.update({**tok,
+                         "generation": gen,
+                         "retraction_files": sorted(
+                             (meta.get("retraction_files") or []) + new_r),
+                         "retracted": int(meta.get("retracted", 0))
+                         + n_retr})
+            self._write_index_meta(out, meta)
+            return "incremental"
+        finally:
+            if cl is not None:
+                cl.unpersist()
 
     def drop_vector_index(self, vec_col: str = "embedding") -> None:
-        shutil.rmtree(self._vector_index_dir(vec_col), ignore_errors=True)
+        shutil.rmtree(self._index_dir("vector", vec_col), ignore_errors=True)
 
     def vector_index_meta(self, vec_col: str = "embedding") -> dict | None:
-        try:
-            with open(os.path.join(self._vector_index_dir(vec_col),
-                                   "_meta.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        return self._read_index_meta(self._index_dir("vector", vec_col))
 
     # ------- persisted inverted text index (≈ the reference's global
     #         full-text indexer; same persisted-index/partition-prune
     #         contract as create_vector_index above) -------
-
-    def _text_index_dir(self, text_col: str) -> str:
-        return os.path.join(self.paths.meta_root, "index", "fulltext", text_col)
 
     def create_text_index(self, text_col: str = "text",
                           id_col: str | None = None,
@@ -3481,7 +3460,7 @@ class Table:
                        projection=[id_col, text_col])
         postings, stats = self._text_postings(df, id_col, text_col,
                                               n_buckets)
-        out = self._text_index_dir(text_col)
+        out = self._index_dir("fulltext", text_col)
         shutil.rmtree(out, ignore_errors=True)
         postings.write.partitionBy("bucket").parquet(out)
         files = self._index_files(out)
@@ -3498,6 +3477,41 @@ class Table:
             "retraction_files": [],
             "retracted": 0})
         return n_buckets
+
+    # persisted-index families, one directory each under
+    # <meta_root>/index/ — rebuildable sidecars with their own create/
+    # refresh/drop lifecycle, never manifest-tracked
+    _INDEX_FAMILIES = ("vector", "fulltext", "dedup", "dedup_vec")
+
+    def _index_dir(self, family: str, col: str) -> str:
+        assert family in self._INDEX_FAMILIES, family
+        return os.path.join(self.paths.meta_root, "index", family, col)
+
+    @staticmethod
+    def _read_index_meta(root: str) -> dict | None:
+        try:
+            with open(os.path.join(root, "_meta.json")) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
+
+    def _append_index(self, root: str, meta: dict, df: DataFrame | None,
+                      part_col: str, gen: int | None = None) -> list[str]:
+        """Append `df` (None: nothing) to the index dir partitioned by
+        `part_col` and pin the data files this write creates in
+        `meta['files']` (and, with `gen`, in `meta['file_gens']`);
+        returns them. Crash safety: files present before the append —
+        including orphans of a previously crashed refresh — are NOT
+        credited; the caller's atomic meta replace publishes the pin."""
+        pre = set(self._index_files(root))
+        if df is not None:
+            df.write.mode("append").partitionBy(part_col).parquet(root)
+        new = [f for f in self._index_files(root) if f not in pre]
+        meta["files"] = sorted(meta.get("files", sorted(pre)) + new)
+        if gen is not None:
+            meta["file_gens"] = {**(meta.get("file_gens") or {}),
+                                 **{f: gen for f in new}}
+        return new
 
     @staticmethod
     def _index_files(root: str) -> list[str]:
@@ -3603,31 +3617,25 @@ class Table:
         return postings, {"n": row["n"], "avgdl": row["avgdl"],
                           "sum_dl": int(row["sum_dl"] or 0)}
 
-    def _index_delta(self, indexed_snapshot: int,
-                     indexed_ts: int | None = None,
-                     to_snapshot: int | None = None) -> DataFrame | None:
-        """Rows appended since `indexed_snapshot`, or None when the
-        history can't be expressed as pure appends (PK merges, overwrite/
-        delete commits — retraction would need posting removal). COMPACT
-        snapshots are skipped: they rewrite files, not the logical row
-        set. A rewritten base (rollback id re-use, checked via
-        `indexed_ts`) also returns None — walking (base, latest] on top
-        of a different base would keep phantom rows. `to_snapshot`
-        bounds the walk: refreshers pass the snapshot token they
-        captured BEFORE computing the delta, so a commit racing the
-        refresh is neither silently claimed by the persisted pin nor
-        double-appended by the next refresh (r12 index×commit race
-        model)."""
+    def _index_delta(self, meta: dict, tok: dict) -> DataFrame | None:
+        """Rows appended since the snapshot the index `meta` pins, or
+        None when the history can't be expressed as pure appends (PK
+        merges, overwrite/delete commits — retraction would need posting
+        removal). COMPACT snapshots are skipped: they rewrite files, not
+        the logical row set. A rewritten base (rollback id re-use,
+        checked via the pinned `snapshot_ts`) also returns None —
+        walking (base, latest] on top of a different base would keep
+        phantom rows. The walk ends at `tok`, the snapshot token the
+        refresher captured BEFORE computing the delta, so a commit
+        racing the refresh is neither silently claimed by the persisted
+        pin nor double-appended by the next refresh (r12 index×commit
+        race model)."""
         from paimon_spark.metadata import COMMIT_APPEND, COMMIT_COMPACT
-        if self.schema.is_pk_table:
+        if self.schema.is_pk_table or not self._index_base_intact(meta):
             return None
-        if not self._index_base_intact({"snapshot_id": indexed_snapshot,
-                                        "snapshot_ts": indexed_ts}):
-            return None
-        latest = to_snapshot if to_snapshot is not None \
-            else self.paths.latest_snapshot_id()
         parts: list[DataFrame] = []
-        for sid in range(indexed_snapshot + 1, latest + 1):
+        for sid in range((meta["snapshot_id"] or 0) + 1,
+                         tok["snapshot_id"] + 1):
             snap = self.paths.read_snapshot(sid)
             if snap.commit_kind == COMMIT_COMPACT:
                 continue
@@ -3659,24 +3667,20 @@ class Table:
     # practice (training cost must not scale with the corpus)
     _PQ_TRAIN_SAMPLE = 10_000
 
-    def _index_changelog_delta(self, indexed_snapshot: int,
-                               indexed_ts: int | None = None,
-                               to_snapshot: int | None = None):
-        """Changelog rows (logical cols + _row_kind) between the indexed
-        snapshot and `to_snapshot` (default latest) for a PK table, or
-        None when underivable. -U/-D rows carry the OLD values (stat
-        retraction), +I/+U the new. None after a rollback rewrote the
-        indexed base (the changelog would diff against the WRONG old
-        state). `to_snapshot` pins the refresher's pre-captured token —
-        see _index_delta."""
-        if not self.schema.is_pk_table or not indexed_snapshot:
-            return None
-        if not self._index_base_intact({"snapshot_id": indexed_snapshot,
-                                        "snapshot_ts": indexed_ts}):
+    def _index_changelog_delta(self, meta: dict, tok: dict):
+        """Changelog rows (logical cols + _row_kind) between the snapshot
+        the index `meta` pins and the refresher's pre-captured token
+        `tok` for a PK table, or None when underivable. -U/-D rows carry
+        the OLD values (stat retraction), +I/+U the new. None after a
+        rollback rewrote the indexed base (the changelog would diff
+        against the WRONG old state) — see _index_delta."""
+        if not (self.schema.is_pk_table and meta["snapshot_id"]
+                and self._index_base_intact(meta)):
             return None
         try:
             from paimon_spark.operators.changelog import derive_changelog
-            return derive_changelog(self, indexed_snapshot, to_snapshot)
+            return derive_changelog(self, meta["snapshot_id"],
+                                    tok["snapshot_id"])
         except Exception:                              # noqa: BLE001
             return None
 
@@ -3750,10 +3754,8 @@ class Table:
         if self._index_current(meta):
             return "fresh"
         id_col, n_b = meta["id_col"], meta["n_buckets"]
-        out = self._text_index_dir(text_col)
-        delta = self._index_delta(meta["snapshot_id"] or 0,
-                                  meta.get("snapshot_ts"),
-                                  to_snapshot=tok["snapshot_id"])
+        out = self._index_dir("fulltext", text_col)
+        delta = self._index_delta(meta, tok)
         if delta is None and self.schema.is_pk_table:
             return self._refresh_text_index_pk(text_col, meta, tok)
         if delta is None:
@@ -3762,26 +3764,15 @@ class Table:
             return "rebuilt"
         postings, stats = self._text_postings(
             delta.select(id_col, text_col), id_col, text_col, n_b)
-        # crash safety: files present before the append (including
-        # orphans of a previously crashed refresh) are NOT credited to
-        # this refresh; only the files this write creates join the
-        # meta-pinned list, and the meta replace is atomic
-        pre = set(self._index_files(out))
-        postings.write.mode("append").partitionBy("bucket").parquet(out)
-        new = [f for f in self._index_files(out) if f not in pre]
+        self._append_index(out, meta, postings, "bucket",
+                           int(meta.get("generation", 0)))
         n0, n1 = meta["n_docs"], stats["n"]
         avgdl = ((meta["avgdl"] * n0 + (stats["avgdl"] or 0.0) * n1)
                  / (n0 + n1)) if (n0 + n1) else 1.0
-        gen = int(meta.get("generation", 0))
-        fgens = dict(meta.get("file_gens") or {})
-        fgens.update({f: gen for f in new})
         meta.update({"n_docs": n0 + n1, "avgdl": avgdl,
                      "sum_dl": int(meta.get(
                          "sum_dl", meta["avgdl"] * n0)) + stats["sum_dl"],
-                     **tok,
-                     "files": sorted(meta.get("files",
-                                              sorted(pre)) + new),
-                     "file_gens": fgens})
+                     **tok})
         self._write_index_meta(out, meta)
         return "incremental"
 
@@ -3794,10 +3785,8 @@ class Table:
         _INDEX_REBUILD_RETRACT_FRACTION of the corpus (query-side join
         cost compaction, the analog of LSM tombstone GC)."""
         id_col, n_b = meta["id_col"], meta["n_buckets"]
-        out = self._text_index_dir(text_col)
-        cl = self._index_changelog_delta(
-                meta["snapshot_id"] or 0, meta.get("snapshot_ts"),
-                to_snapshot=tok["snapshot_id"])
+        out = self._index_dir("fulltext", text_col)
+        cl = self._index_changelog_delta(meta, tok)
         if cl is None:
             self.create_text_index(text_col, id_col, n_b)
             return "rebuilt"
@@ -3824,22 +3813,17 @@ class Table:
                 self.create_text_index(text_col, id_col, n_b)
                 return "rebuilt"
             gen = int(meta.get("generation", 0)) + 1
-            pre = set(self._index_files(out))
             new_r: list[str] = []
             if n_retr:
                 new_r = self._write_index_retractions(
                     out, cl.filter(F.col(KIND_COL).isin("-U", "-D"))
                            .select(F.col(id_col).alias("id")), gen)
             adds = cl.filter(F.col(KIND_COL).isin("+I", "+U"))
+            postings = None
             if adds.take(1):
                 postings, _ = self._text_postings(
                     adds.select(id_col, text_col), id_col, text_col, n_b)
-                postings.write.mode("append") \
-                        .partitionBy("bucket").parquet(out)
-            new_p = [f for f in self._index_files(out)
-                     if f not in pre and f not in new_r]
-            fgens = dict(meta.get("file_gens") or {})
-            fgens.update({f: gen for f in new_p})
+            self._append_index(out, meta, postings, "bucket", gen)
             sum_dl = (int(meta.get("sum_dl", meta["avgdl"]
                                    * meta["n_docs"]))
                       + int(agg["dl_add"] or 0) - int(agg["dl_retr"] or 0))
@@ -3851,8 +3835,6 @@ class Table:
                 "avgdl": (sum_dl / n_docs) if n_docs else 1.0,
                 **tok,
                 "generation": gen,
-                "files": sorted(meta.get("files", sorted(pre)) + new_p),
-                "file_gens": fgens,
                 "retraction_files": sorted(
                     (meta.get("retraction_files") or []) + new_r),
                 "retracted": int(meta.get("retracted", 0)) + n_retr})
@@ -3862,15 +3844,11 @@ class Table:
             cl.unpersist()
 
     def drop_text_index(self, text_col: str = "text") -> None:
-        shutil.rmtree(self._text_index_dir(text_col), ignore_errors=True)
+        shutil.rmtree(self._index_dir("fulltext", text_col),
+                      ignore_errors=True)
 
     def text_index_meta(self, text_col: str = "text") -> dict | None:
-        try:
-            with open(os.path.join(self._text_index_dir(text_col),
-                                   "_meta.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        return self._read_index_meta(self._index_dir("fulltext", text_col))
 
     @staticmethod
     def _term_bucket(term: str, n_buckets: int) -> int:
@@ -3912,7 +3890,7 @@ class Table:
             T.StructField("dl", T.IntegerType()),
             T.StructField("tf", T.LongType()),
             T.StructField("bucket", T.LongType())])
-        root = self._text_index_dir(text_col)
+        root = self._index_dir("fulltext", text_col)
         paths = self._index_read_paths(root, meta)
         if not paths:
             return bm25_search(self.read(), query, k, text_col, k1, b)
@@ -3988,24 +3966,23 @@ class Table:
         return (self.read().join(F.broadcast(fused), id_col)
                 .orderBy(F.desc("_score"), F.asc(id_col)))
 
-    # ------------- persisted dedup signature index (r9) -------------
+    # ------------- persisted band-key dedup indexes (r9) -------------
     # The incremental-dedup workflow a training-data pipeline runs at
     # 100 TB: dedup each NEW batch against the existing corpus without
-    # re-banding the corpus — corpus MinHash-LSH band keys persist
-    # bucket-partitioned (pmod(xxhash64(band_key), n)), the new batch
-    # computes its own bands and joins only the matching buckets.
-    # Same build-once/prune-every-query contract as the text index.
-
-    def _dedup_index_dir(self, text_col: str) -> str:
-        return os.path.join(self.paths.meta_root, "index", "dedup", text_col)
+    # re-banding the corpus — the corpus's LSH band keys persist
+    # bucket-partitioned (pmod(xxhash64(bk), n)), the new batch computes
+    # its own bands and joins only the matching buckets. One
+    # implementation serves both families, parametrised by the band-row
+    # function `band_rows(df, meta) -> (id, bk, bucket)`:
+    #   dedup      MinHash-LSH over text, `_minhash_band_rows`;
+    #   dedup_vec  sign-LSH over embeddings, `_embedding_band_rows`
+    #              (2 longs per band per vector — ~1% of a float[64]
+    #              corpus).
+    # Same build-once/prune-every-query contract as the text index;
+    # exact verify (Jaccard / cosine) runs on candidates only.
 
     def dedup_index_meta(self, text_col: str = "text") -> dict | None:
-        try:
-            with open(os.path.join(self._dedup_index_dir(text_col),
-                                   "_meta.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        return self._read_index_meta(self._index_dir("dedup", text_col))
 
     @staticmethod
     def _dedup_band_keys(df: DataFrame, id_col: str, text_col: str,
@@ -4043,6 +4020,121 @@ class Table:
                 .withColumn("bucket",
                             F.pmod(F.xxhash64("bk"), F.lit(n_buckets))))
 
+    @classmethod
+    def _minhash_band_rows(cls, df: DataFrame, m: dict) -> DataFrame:
+        """The MinHash index's band-row function:
+        `_dedup_band_rows` ∘ `_dedup_band_keys` under index meta `m`."""
+        return cls._dedup_band_rows(cls._dedup_band_keys(
+            df, m["id_col"], m["text_col"], m["k"], m["bands"], m["n"]),
+            m["bands"], m["n_buckets"])
+
+    def _create_band_index(self, family: str, col: str, meta: dict,
+                           band_rows) -> str:
+        """Build a band-key index over `col`: band rows of the corpus
+        read at a pre-captured snapshot token, one file per bucket, the
+        written files pinned in the meta (`meta`'s family keys first,
+        then the token and `files`)."""
+        # capture the token BEFORE reading the corpus and read AT that
+        # snapshot: a commit racing the build must leave the persisted
+        # pin stale (next refresh picks it up), never falsely fresh
+        tok = self._snapshot_token()
+        rows = band_rows(self.read(snapshot_id=tok["snapshot_id"],
+                                   projection=[meta["id_col"], col]), meta)
+        out = self._index_dir(family, col)
+        shutil.rmtree(out, ignore_errors=True)
+        # one shuffle keyed on bucket → exactly one file per bucket
+        # (writing straight from the banding tasks sprays
+        # tasks×buckets tiny files — reading them back cost more
+        # than re-banding the corpus at 50k docs)
+        rows.repartition(meta["n_buckets"], "bucket") \
+            .write.partitionBy("bucket").parquet(out)
+        self._write_index_meta(out, {**meta, **tok,
+                                     "files": self._index_files(out)})
+        return out
+
+    def _refresh_band_index(self, family: str, col: str, meta: dict,
+                            band_rows) -> str:
+        """Append-only delta refresh: band rows for rows committed since
+        the indexed snapshot append to the bucket-partitioned dataset;
+        non-append history falls back to a full rebuild (band removal
+        would need retractions). Returns 'fresh'|'incremental'|'rebuilt'."""
+        # capture the refresh's upper bound BEFORE computing the delta:
+        # a commit racing the refresh must neither be claimed by the
+        # persisted pin (false-fresh would skip its rows forever) nor
+        # double-appended by the next refresh (r12 race model)
+        tok = self._snapshot_token()
+        if self._index_current(meta):
+            return "fresh"
+        delta = self._index_delta(meta, tok)
+        if delta is None:
+            self._create_band_index(family, col, meta, band_rows)
+            return "rebuilt"
+        out = self._index_dir(family, col)
+        rows = band_rows(delta.select(meta["id_col"], col), meta)
+        self._append_index(out, meta,
+                           rows.repartition(meta["n_buckets"], "bucket"),
+                           "bucket")
+        meta.update(tok)
+        self._write_index_meta(out, meta)
+        return "incremental"
+
+    def _band_index_candidates(self, family: str, col: str,
+                               meta: dict | None, p: dict,
+                               batch_rows: DataFrame, band_rows):
+        """(new_id, dup_of, 'corpus') pairs of the batch band rows
+        against the persisted index (bucket-pruned to the batch's own
+        band buckets) — or, when the index is stale or missing, against
+        the corpus banded on the fly (slower, never wrong). `p` is the
+        meta the query runs under (its id_col may be the caller's).
+        Returns (pairs, index dir or None when not read)."""
+        root = None
+        if self._index_current(meta):
+            root = self._index_dir(family, col)
+            # explicit schema: no footer-read inference pass; bk takes
+            # the batch band rows' type (long MinHash, int sign-LSH)
+            idx_schema = T.StructType([
+                T.StructField("id", self.schema.data_type(p["id_col"])),
+                T.StructField("bk", batch_rows.schema["bk"].dataType),
+                T.StructField("bucket", T.LongType())])
+            idx = (self.spark.read.schema(idx_schema)
+                   .option("basePath", root)
+                   .parquet(*self._index_read_paths(root, meta)))
+            idx = self._static_bucket_prune(idx, batch_rows, root, meta)
+        else:
+            idx = band_rows(self.read(projection=[p["id_col"], col]), p)
+        # join on (bk, bucket) with the batch side BROADCAST: bucket is
+        # implied by bk (pmod of its hash) so it adds nothing logically,
+        # but it is the index's partition column — Spark's dynamic
+        # partition pruning reuses the broadcast to prune the index scan
+        # to the batch's own band buckets, with no driver round-trip
+        # (the previous distinct+collect job cost more than it saved)
+        pairs = (idx.select(F.col("id").alias("dup_of"), "bk", "bucket")
+                 .join(F.broadcast(
+                     batch_rows.select(F.col("id").alias("new_id"),
+                                       "bk", "bucket")), ["bk", "bucket"])
+                 .filter(F.col("new_id") != F.col("dup_of"))
+                 .select("new_id", "dup_of").distinct()
+                 .withColumn("src", F.lit("corpus")))
+        return pairs, root
+
+    def _verify_hint(self, ids: DataFrame, root: str | None,
+                     meta: dict | None):
+        """(join hint, index row bound) for the verify join against the
+        candidate ids. The candidate set is THRESHOLD-dependent, not
+        batch-dependent: a loose threshold on a dense near-dup corpus
+        can make it arbitrarily large (VERDICT r9 #5), so broadcast only
+        below _VERIFY_BROADCAST_MAX_IDS and shuffle-join above it.
+        Candidate ids ⊆ index ids, so a fresh index whose footer-derived
+        row count fits under the cap needs no Spark job; otherwise the
+        limit-probe count short-circuits as soon as the cap is
+        exceeded."""
+        cap = self._VERIFY_BROADCAST_MAX_IDS
+        bound = self._index_rows_upper_bound(root, meta) if root else None
+        if (bound is None or bound > cap) \
+                and ids.limit(cap + 1).count() > cap:
+            return (lambda d: d), bound
+        return F.broadcast, bound
+
     def create_dedup_index(self, text_col: str = "text",
                            id_col: str | None = None, k: int = 16,
                            bands: int = 4, n: int = 3,
@@ -4051,69 +4143,21 @@ class Table:
         partitioned by band-key bucket. One distributed pass; the index
         is `bands` (id, long) rows per document — a few % of a
         real multi-KB-document corpus's bytes."""
-        id_col = id_col or self.schema.field_names[0]
-        # capture the token BEFORE reading the corpus and read AT that
-        # snapshot: a commit racing the build must leave the persisted
-        # pin stale (next refresh picks it up), never falsely fresh
-        tok = self._snapshot_token()
-        rows = self._dedup_band_rows(self._dedup_band_keys(
-            self.read(snapshot_id=tok["snapshot_id"],
-                      projection=[id_col, text_col]),
-            id_col, text_col, k, bands, n), bands, n_buckets)
-        out = self._dedup_index_dir(text_col)
-        shutil.rmtree(out, ignore_errors=True)
-        # one shuffle keyed on bucket → exactly one file per bucket
-        # (writing straight from the banding tasks sprays
-        # tasks×buckets tiny files — reading them back cost more
-        # than re-banding the corpus at 50k docs)
-        rows.repartition(n_buckets, "bucket") \
-            .write.partitionBy("bucket").parquet(out)
-        files = self._index_files(out)
-        self._write_index_meta(out, {
-            "text_col": text_col, "id_col": id_col, "k": k,
-            "bands": bands, "n": n, "n_buckets": n_buckets,
-            **tok,
-            "files": files})
-        return out
+        return self._create_band_index("dedup", text_col, {
+            "text_col": text_col,
+            "id_col": id_col or self.schema.field_names[0], "k": k,
+            "bands": bands, "n": n, "n_buckets": n_buckets},
+            self._minhash_band_rows)
 
     def refresh_dedup_index(self, text_col: str = "text") -> str:
-        """Append-only delta refresh: band rows for rows committed since
-        the indexed snapshot append to the bucket-partitioned dataset;
-        non-append history falls back to a full rebuild (band removal
-        would need retractions). Returns 'fresh'|'incremental'|'rebuilt'."""
+        """Append-only delta refresh of the MinHash index (see
+        _refresh_band_index). Returns 'fresh'|'incremental'|'rebuilt'."""
         meta = self.dedup_index_meta(text_col)
         if meta is None:
             raise ValueError(f"no dedup index on {text_col}; run "
                              "create_dedup_index first")
-        # capture the refresh's upper bound BEFORE computing the delta:
-        # a commit racing the refresh must neither be claimed by the
-        # persisted pin (false-fresh would skip its rows forever) nor
-        # double-appended by the next refresh (r12 race model)
-        tok = self._snapshot_token()
-        if self._index_current(meta):
-            return "fresh"
-        delta = self._index_delta(meta["snapshot_id"] or 0,
-                                  meta.get("snapshot_ts"),
-                                  to_snapshot=tok["snapshot_id"])
-        if delta is None:
-            self.create_dedup_index(text_col, meta["id_col"], meta["k"],
-                                    meta["bands"], meta["n"],
-                                    meta["n_buckets"])
-            return "rebuilt"
-        rows = self._dedup_band_rows(self._dedup_band_keys(
-            delta.select(meta["id_col"], text_col), meta["id_col"],
-            text_col, meta["k"], meta["bands"], meta["n"]),
-            meta["bands"], meta["n_buckets"])
-        out = self._dedup_index_dir(text_col)
-        pre = set(self._index_files(out))
-        rows.repartition(meta["n_buckets"], "bucket") \
-            .write.mode("append").partitionBy("bucket").parquet(out)
-        new = [f for f in self._index_files(out) if f not in pre]
-        meta.update({**tok,
-                     "files": sorted(meta.get("files",
-                                              sorted(pre)) + new)})
-        self._write_index_meta(out, meta)
-        return "incremental"
+        return self._refresh_band_index("dedup", text_col, meta,
+                                        self._minhash_band_rows)
 
     def dedup_against_index(self, new_docs: DataFrame,
                             text_col: str = "text",
@@ -4143,13 +4187,10 @@ class Table:
             _ckpt_no_constraints, jaccard_shingles, shingles_from_tokens)
         from paimon_spark.functions.text import tokens
         meta = self.dedup_index_meta(text_col)
-        if meta is not None:
-            id_col = id_col or meta["id_col"]
-            k, bands, n = meta["k"], meta["bands"], meta["n"]
-            n_buckets = meta["n_buckets"]
-        else:
-            id_col = id_col or self.schema.field_names[0]
-            k, bands, n, n_buckets = 16, 4, 3, 64
+        p = dict(meta or {"text_col": text_col,
+                          "id_col": self.schema.field_names[0],
+                          "k": 16, "bands": 4, "n": 3, "n_buckets": 64})
+        id_col = p["id_col"] = id_col or p["id_col"]
         # __rep: min id of each exact-copy group — one content-hash
         # window, as in minhash_lsh_pairs' hot-bucket guard. The
         # checkpoint carries no origin constraints, so the batch-pair
@@ -4158,38 +4199,11 @@ class Table:
             "__rep", F.min(id_col).over(Window.partitionBy(
                 F.md5(F.encode(F.col(text_col), "UTF-8")))))
         sig = _ckpt_no_constraints(self._dedup_band_keys(
-            docs, id_col, text_col, k, bands, n, ("__rep",),
+            docs, id_col, text_col, p["k"], p["bands"], p["n"], ("__rep",),
             "__s" if verify_jaccard is not None else None))
-        nb = self._dedup_band_rows(sig, bands, n_buckets, "__rep")
-        fresh = self._index_current(meta)
-        if fresh:
-            root = self._dedup_index_dir(text_col)
-            idx_schema = T.StructType([
-                T.StructField("id", self.schema.data_type(id_col)),
-                T.StructField("bk", T.LongType()),
-                T.StructField("bucket", T.LongType())])
-            idx = (self.spark.read.schema(idx_schema)
-                   .option("basePath", root)
-                   .parquet(*self._index_read_paths(root, meta)))
-            idx = self._static_bucket_prune(idx, nb, root, meta)
-        else:
-            idx = self._dedup_band_rows(self._dedup_band_keys(
-                self.read(projection=[id_col, text_col]), id_col,
-                text_col, k, bands, n), bands, n_buckets)
-        # join on (bk, bucket) with the batch side BROADCAST: bucket is
-        # implied by bk (pmod of its hash) so it adds nothing logically,
-        # but it is the index's partition column — Spark's dynamic
-        # partition pruning reuses the broadcast to prune the index scan
-        # to the batch's own band buckets, with no driver round-trip
-        # (the previous distinct+collect job cost more than it saved)
-        corpus_pairs = (idx.select(F.col("id").alias("dup_of"), "bk",
-                                   "bucket")
-                        .join(F.broadcast(
-                            nb.select(F.col("id").alias("new_id"),
-                                      "bk", "bucket")), ["bk", "bucket"])
-                        .filter(F.col("new_id") != F.col("dup_of"))
-                        .select("new_id", "dup_of").distinct()
-                        .withColumn("src", F.lit("corpus")))
+        nb = self._dedup_band_rows(sig, p["bands"], p["n_buckets"], "__rep")
+        corpus_pairs, root = self._band_index_candidates(
+            "dedup", text_col, meta, p, nb, self._minhash_band_rows)
         bp = None
         if include_batch_pairs:
             # within-batch LSH pairs among the reps (the batch is one
@@ -4226,25 +4240,11 @@ class Table:
                     .select("new_id", "dup_of", "src", "jaccard"))
 
         # corpus shingles only for rows that are candidates: semi-
-        # restrict by broadcast candidate ids, so the corpus pays scan +
+        # restrict by the candidate ids, so the corpus pays scan +
         # broadcast-probe ONLY, never a corpus-wide shingle array or an
-        # Exchange. The candidate set is THRESHOLD-dependent, not batch-
-        # dependent: a loose threshold on a dense near-dup corpus can
-        # make it arbitrarily large, and its rows carry full shingle
-        # arrays — broadcast only below the gate, shuffle join above
-        # it. The limit-probe count short-circuits as soon as the cap is
-        # exceeded.
-        hint = F.broadcast
+        # Exchange (below the _verify_hint gate)
         ids = corpus_pairs.select("dup_of").distinct()
-        cap = self._VERIFY_BROADCAST_MAX_IDS
-        # candidate ids ⊆ index ids: a footer-derived bound under the
-        # cap proves broadcast-safety with zero Spark jobs
-        bound = (self._index_rows_upper_bound(
-            self._dedup_index_dir(text_col), meta) if fresh else None)
-        if bound is not None and bound <= cap:
-            pass
-        elif ids.limit(cap + 1).count() > cap:
-            hint = lambda d: d                              # noqa: E731
+        hint, _ = self._verify_hint(ids, root, meta)
         corpus = self.read(projection=[id_col, text_col])
         corpus = corpus.join(hint(ids), corpus[id_col] == ids["dup_of"],
                              "left_semi")
@@ -4256,7 +4256,7 @@ class Table:
         rs = (corpus.select(F.col(id_col).alias("dup_of"),
                             tokens(F.col(text_col)).alias("__tk"))
               .select("dup_of", shingles_from_tokens(
-                  F.col("__tk"), n).alias("__sb")))
+                  F.col("__tk"), p["n"]).alias("__sb")))
         out = _verify(corpus_pairs, rs, hint)
         if bp is not None:
             out = out.unionByName(_verify(bp, sig.select(
@@ -4327,45 +4327,32 @@ class Table:
         return idx.filter(F.col("bucket").isin(bks))
 
     # -------- persisted embedding dedup index (sign-LSH, r9) --------
-    # Embedding-side twin of the MinHash dedup index above: the corpus's
-    # sign-LSH band keys persist once (band rows are 2 longs per band
-    # per vector — ~1% of a float[64] corpus) so each NEW ingest batch
-    # finds its near-dup candidates with a band join against the index
-    # instead of re-hashing the corpus. Exact-cosine verify runs on
-    # candidates only — same candidate→verify contract as
+    # The embedding family of the band-key indexes above: exact-cosine
+    # verify on candidates only — same candidate→verify contract as
     # functions.similarity.embedding_near_dup, never all-pairs.
-
-    def _embedding_dedup_index_dir(self, vec_col: str) -> str:
-        return os.path.join(self.paths.meta_root, "index", "dedup_vec", vec_col)
 
     def embedding_dedup_index_meta(self, vec_col: str = "embedding"
                                    ) -> dict | None:
-        try:
-            with open(os.path.join(
-                    self._embedding_dedup_index_dir(vec_col),
-                    "_meta.json")) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
+        return self._read_index_meta(self._index_dir("dedup_vec", vec_col))
 
     @staticmethod
-    def _embedding_band_rows(df: DataFrame, id_col: str, vec_col: str,
-                             n_planes: int, band_bits: int, dim: int,
-                             n_buckets: int) -> DataFrame:
-        """(id, bk, bucket) sign-LSH band rows — shared by the build,
+    def _embedding_band_rows(df: DataFrame, m: dict) -> DataFrame:
+        """(id, bk, bucket) sign-LSH band rows under index meta `m` —
+        the embedding index's band-row function, shared by the build,
         the delta refresh, and the query side so both sides of the
         candidate join hash identical keys. `bk` already encodes the
         band index (with_band_keys: band_idx·2^band_bits + value)."""
         from paimon_spark.functions.similarity import with_band_keys
-        nb = n_planes // band_bits
+        id_col, vec_col = m["id_col"], m["vec_col"]
         sig = with_band_keys(df.select(F.col(id_col), F.col(vec_col)),
-                             id_col, vec_col, n_planes, band_bits, dim)
+                             id_col, vec_col, m["n_planes"],
+                             m["band_bits"], m["dim"])
         stacked = sig.select(
             F.col(id_col).alias("id"),
-            F.explode(F.array(*[F.col(f"bandk{i}")
-                                for i in range(nb)])).alias("bk"))
+            F.explode(F.array(*[F.col(f"bandk{i}") for i in range(
+                m["n_planes"] // m["band_bits"])])).alias("bk"))
         return stacked.withColumn(
-            "bucket", F.pmod(F.xxhash64("bk"), F.lit(n_buckets)))
+            "bucket", F.pmod(F.xxhash64("bk"), F.lit(m["n_buckets"])))
 
     def create_embedding_dedup_index(self, vec_col: str = "embedding",
                                      id_col: str | None = None,
@@ -4378,64 +4365,22 @@ class Table:
         2^band_bits values) — the defaults give 64 distinct keys; wider
         vectors at 100 TB would raise n_planes so each bucket holds a
         sliver of the corpus."""
-        id_col = id_col or self.schema.field_names[0]
-        # pre-captured token: see create_dedup_index (r12 race model)
-        tok = self._snapshot_token()
-        rows = self._embedding_band_rows(
-            self.read(snapshot_id=tok["snapshot_id"],
-                      projection=[id_col, vec_col]),
-            id_col, vec_col, n_planes, band_bits, dim, n_buckets)
-        out = self._embedding_dedup_index_dir(vec_col)
-        shutil.rmtree(out, ignore_errors=True)
-        # one shuffle keyed on bucket → exactly one file per bucket
-        # (writing straight from the banding tasks sprays
-        # tasks×buckets tiny files — reading them back cost more
-        # than re-banding the corpus at 50k docs)
-        rows.repartition(n_buckets, "bucket") \
-            .write.partitionBy("bucket").parquet(out)
-        files = self._index_files(out)
-        self._write_index_meta(out, {
-            "vec_col": vec_col, "id_col": id_col,
+        return self._create_band_index("dedup_vec", vec_col, {
+            "vec_col": vec_col,
+            "id_col": id_col or self.schema.field_names[0],
             "n_planes": n_planes, "band_bits": band_bits, "dim": dim,
-            "n_buckets": n_buckets,
-            **tok,
-            "files": files})
-        return out
+            "n_buckets": n_buckets}, self._embedding_band_rows)
 
     def refresh_embedding_dedup_index(self,
                                       vec_col: str = "embedding") -> str:
-        """Append-only delta refresh (band rows for rows committed since
-        the indexed snapshot append in place); non-append history falls
-        back to a rebuild. Returns 'fresh'|'incremental'|'rebuilt'."""
+        """Append-only delta refresh of the embedding index (see
+        _refresh_band_index). Returns 'fresh'|'incremental'|'rebuilt'."""
         meta = self.embedding_dedup_index_meta(vec_col)
         if meta is None:
             raise ValueError(f"no embedding dedup index on {vec_col}; "
                              "run create_embedding_dedup_index first")
-        tok = self._snapshot_token()        # pre-captured: race model
-        if self._index_current(meta):
-            return "fresh"
-        delta = self._index_delta(meta["snapshot_id"] or 0,
-                                  meta.get("snapshot_ts"),
-                                  to_snapshot=tok["snapshot_id"])
-        if delta is None:
-            self.create_embedding_dedup_index(
-                vec_col, meta["id_col"], meta["n_planes"],
-                meta["band_bits"], meta["dim"], meta["n_buckets"])
-            return "rebuilt"
-        rows = self._embedding_band_rows(
-            delta.select(meta["id_col"], vec_col), meta["id_col"],
-            vec_col, meta["n_planes"], meta["band_bits"], meta["dim"],
-            meta["n_buckets"])
-        out = self._embedding_dedup_index_dir(vec_col)
-        pre = set(self._index_files(out))
-        rows.repartition(meta["n_buckets"], "bucket") \
-            .write.mode("append").partitionBy("bucket").parquet(out)
-        new = [f for f in self._index_files(out) if f not in pre]
-        meta.update({**tok,
-                     "files": sorted(meta.get("files",
-                                              sorted(pre)) + new)})
-        self._write_index_meta(out, meta)
-        return "incremental"
+        return self._refresh_band_index("dedup_vec", vec_col, meta,
+                                        self._embedding_band_rows)
 
     def dedup_embeddings_against_index(self, new_vecs: DataFrame,
                                        vec_col: str = "embedding",
@@ -4457,54 +4402,25 @@ class Table:
         from paimon_spark.functions.similarity import (
             cos_div, dot, embedding_near_dup, norm)
         meta = self.embedding_dedup_index_meta(vec_col)
-        if meta is not None:
-            id_col = id_col or meta["id_col"]
-            n_planes, band_bits = meta["n_planes"], meta["band_bits"]
-            dim, n_buckets = meta["dim"], meta["n_buckets"]
-        else:
-            id_col = id_col or self.schema.field_names[0]
-            n_planes, band_bits, dim, n_buckets = 16, 4, 64, 16
+        p = dict(meta or {"vec_col": vec_col,
+                          "id_col": self.schema.field_names[0],
+                          "n_planes": 16, "band_bits": 4, "dim": 64,
+                          "n_buckets": 16})
+        id_col = p["id_col"] = id_col or p["id_col"]
         # the batch's band rows feed the bucket prune and the corpus
         # join: checkpointed eagerly, so nothing is left in the cache
-        nb_rows = _ckpt_no_constraints(self._embedding_band_rows(
-            new_vecs, id_col, vec_col, n_planes, band_bits, dim,
-            n_buckets))
-        fresh = self._index_current(meta)
-        if fresh:
-            root = self._embedding_dedup_index_dir(vec_col)
-            idx_schema = T.StructType([
-                T.StructField("id", self.schema.data_type(id_col)),
-                T.StructField("bk", T.IntegerType()),
-                T.StructField("bucket", T.LongType())])
-            idx = (self.spark.read.schema(idx_schema)
-                   .option("basePath", root)
-                   .parquet(*self._index_read_paths(root, meta)))
-            idx = self._static_bucket_prune(idx, nb_rows, root, meta)
-        else:
-            idx = self._embedding_band_rows(
-                self.read(projection=[id_col, vec_col]), id_col,
-                vec_col, n_planes, band_bits, dim, n_buckets)
-        # (bk, bucket) join with the batch broadcast — bucket is implied
-        # by bk but it is the partition column, so dynamic partition
-        # pruning trims the index scan to the batch's band buckets
-        # without a driver round-trip (see dedup_against_index)
-        corpus_pairs = (idx.select(F.col("id").alias("dup_of"), "bk",
-                                   "bucket")
-                        .join(F.broadcast(
-                            nb_rows.select(F.col("id").alias("new_id"),
-                                           "bk", "bucket")),
-                            ["bk", "bucket"])
-                        .filter(F.col("new_id") != F.col("dup_of"))
-                        .select("new_id", "dup_of").distinct()
-                        .withColumn("src", F.lit("corpus")))
+        nb_rows = _ckpt_no_constraints(self._embedding_band_rows(new_vecs,
+                                                                 p))
+        corpus_pairs, root = self._band_index_candidates(
+            "dedup_vec", vec_col, meta, p, nb_rows, self._embedding_band_rows)
         bp = None
         if include_batch_pairs:
             # threshold=-2.0 keeps every candidate (cosine ≥ -1), so
             # candidates-only mode and verify mode share one code path
             bp = (embedding_near_dup(
                       new_vecs, threshold if threshold is not None
-                      else -2.0, n_planes, band_bits, id_col, vec_col,
-                      dim)
+                      else -2.0, p["n_planes"], p["band_bits"], id_col,
+                      vec_col, p["dim"])
                   .select(F.col("id_b").alias("new_id"),
                           F.col("id_a").alias("dup_of"), "score")
                   .withColumn("src", F.lit("batch")))
@@ -4531,21 +4447,7 @@ class Table:
                              F.col(vec_col).alias("__vn"),
                              norm(F.col(vec_col)).alias("__nn"))
         ids = corpus_pairs.select("dup_of").distinct()
-        # candidate volume is threshold-dependent — same broadcast gate
-        # as the text verify (VERDICT r9 #5): past the cap the candidate
-        # vectors go through a shuffle join instead of a broadcast
-        hint = F.broadcast
-        cap = self._VERIFY_BROADCAST_MAX_IDS
-        # same footer-derived broadcast-safety bound as the text verify:
-        # candidate ids ⊆ index ids, so a fresh index whose row count
-        # fits under the cap needs no limit-probe job at all
-        bound = (self._index_rows_upper_bound(
-            self._embedding_dedup_index_dir(vec_col), meta)
-            if fresh else None)
-        if bound is not None and bound <= cap:
-            pass
-        elif ids.limit(cap + 1).count() > cap:
-            hint = lambda d: d                              # noqa: E731
+        hint, bound = self._verify_hint(ids, root, meta)
         corpus_v = self.read(projection=[id_col, vec_col])
         # the semi-restriction exists only to BOUND the broadcast side;
         # when the footer bound proves the whole corpus vector slice is
@@ -4553,7 +4455,7 @@ class Table:
         # it first is pure overhead — one distinct + one broadcast + one
         # semi-join dropped from the critical path. bound counts BAND
         # rows (corpus rows × n_bands).
-        n_bands = max(1, n_planes // band_bits)
+        n_bands = max(1, p["n_planes"] // p["band_bits"])
         if bound is not None \
                 and bound <= self._VERIFY_FULL_VEC_BROADCAST_ROWS * n_bands:
             restricted = corpus_v

@@ -306,7 +306,7 @@ def test_randomized_dedup_index_lifecycle(spark, wh):
     def check_plane_parity():
         idx = sorted((r.new_id, r.dup_of, r.src) for r in
                      t.dedup_against_index(new_batch).collect())
-        root = t._dedup_index_dir("text")
+        root = t._index_dir("dedup", "text")
         os.rename(root, root + ".aside")
         try:
             fb = sorted((r.new_id, r.dup_of, r.src) for r in
@@ -442,7 +442,7 @@ def test_randomized_embedding_dedup_index_lifecycle(spark, wh):
         idx = sorted((r.new_id, r.dup_of, r.src) for r in
                      t.dedup_embeddings_against_index(new_batch)
                      .collect())
-        root = t._embedding_dedup_index_dir("embedding")
+        root = t._index_dir("dedup_vec", "embedding")
         os.rename(root, root + ".aside")
         try:
             fb = sorted((r.new_id, r.dup_of, r.src) for r in
@@ -590,7 +590,7 @@ def test_randomized_index_history_model(spark, wh):
     def check_dedup_parity():
         idx = sorted((r.new_id, r.dup_of, r.src) for r in
                      t.dedup_against_index(new_batch).collect())
-        root = t._dedup_index_dir("text")
+        root = t._index_dir("dedup", "text")
         os.rename(root, root + ".aside")
         try:
             fb = sorted((r.new_id, r.dup_of, r.src) for r in
@@ -665,7 +665,7 @@ def test_randomized_index_history_model(spark, wh):
     bi = sorted((r.new_id, r.dup_of) for r in
                 bt.dedup_against_index(new_batch).collect()
                 if r.src == "corpus")
-    root = bt._dedup_index_dir("text")
+    root = bt._index_dir("dedup", "text")
     os.rename(root, root + ".aside")
     try:
         bf = sorted((r.new_id, r.dup_of) for r in
@@ -1067,7 +1067,7 @@ def test_index_refresh_commit_race_token_capture(spark, wh):
     assert t._index_current(t.dedup_index_meta("text"))
 
     # ...exactly once: postings multiset == a from-scratch rebuild
-    out = t._text_index_dir("text")
+    out = t._index_dir("fulltext", "text")
     got = sorted((r.id, r.term, r.tf) for r in
                  spark.read.parquet(out).select("id", "term", "tf")
                  .collect())
@@ -1076,7 +1076,7 @@ def test_index_refresh_commit_race_token_capture(spark, wh):
                   spark.read.parquet(out).select("id", "term", "tf")
                   .collect())
     assert got == want
-    dout = t._dedup_index_dir("text")
+    dout = t._index_dir("dedup", "text")
     gotd = sorted((r.id, r.bk) for r in
                   spark.read.parquet(dout).select("id", "bk").collect())
     t.create_dedup_index("text", n_buckets=4)
@@ -1193,7 +1193,7 @@ def test_concurrent_writers_racing_index_refresh_stress(spark, wh):
         pass
     while t.refresh_dedup_index("text") != "fresh":
         pass
-    out = t._text_index_dir("text")
+    out = t._index_dir("fulltext", "text")
     got = sorted((r.id, r.term, r.tf) for r in
                  spark.read.parquet(out).select("id", "term", "tf")
                  .collect())
@@ -1202,7 +1202,7 @@ def test_concurrent_writers_racing_index_refresh_stress(spark, wh):
                   spark.read.parquet(out).select("id", "term", "tf")
                   .collect())
     assert got == want
-    dout = t._dedup_index_dir("text")
+    dout = t._index_dir("dedup", "text")
     gotd = sorted((r.id, r.bk) for r in
                   spark.read.parquet(dout).select("id", "bk").collect())
     t.create_dedup_index("text", n_buckets=4)

@@ -50,7 +50,7 @@ def test_index_path_equals_exact_path(spark, docs_table):
 def test_index_prunes_to_query_term_buckets(spark, docs_table):
     t = docs_table
     t.create_text_index(n_buckets=16)
-    idx_dir = t._text_index_dir("text")
+    idx_dir = t._index_dir("fulltext", "text")
     n_parts = len([d for d in os.listdir(idx_dir)
                    if d.startswith("bucket=")])
     assert n_parts > 2                          # enough spread to prune
@@ -118,7 +118,7 @@ def test_incremental_refresh_appends_only_delta(spark, docs_table):
     written — and the refreshed index path equals the exact scorer."""
     t = docs_table
     t.create_text_index(n_buckets=8)
-    idx_dir = t._text_index_dir("text")
+    idx_dir = t._index_dir("fulltext", "text")
     files_before = {f for _r, _d, fs in os.walk(idx_dir) for f in fs
                     if f.endswith(".parquet")}
     t.append(spark.createDataFrame(
@@ -215,7 +215,7 @@ def test_refresh_crash_between_append_and_meta_is_safe(spark, docs_table):
         type(t)._write_index_meta = staticmethod(real_write)
     # orphan parquet files exist but the pinned view ignores them:
     meta = t.text_index_meta()
-    orphans = set(t._index_files(t._text_index_dir("text"))) \
+    orphans = set(t._index_files(t._index_dir("fulltext", "text"))) \
         - set(meta["files"])
     assert orphans
     assert meta["snapshot_id"] != t.paths.latest_snapshot_id()
@@ -317,7 +317,10 @@ def test_pk_vector_index_retraction_no_rebuild(spark, wh):
     moved = [x + 0.001 for x in rows[42][1]]
     t.append(spark.createDataFrame([(5, moved)], sch))
     t.delete_where(P.eq("vid", 42))
+    spark.catalog.clearCache()
     assert t.refresh_vector_index("embedding") == "incremental"
+    # the persisted changelog is released on the incremental path too
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     meta = t.vector_index_meta("embedding")
     assert files0 <= set(meta["files"])
     assert meta["retraction_files"] and meta["generation"] == 1
@@ -364,7 +367,7 @@ def test_vector_refresh_crash_with_pq_is_safe(spark, wh):
     finally:
         type(t)._write_index_meta = staticmethod(real_write)
     meta = t.vector_index_meta("embedding")
-    orphans = set(t._index_files(t._vector_index_dir("embedding"))) \
+    orphans = set(t._index_files(t._index_dir("vector", "embedding"))) \
         - set(meta["files"])
     assert orphans
     # stale index -> exact fallback stays correct meanwhile
@@ -400,7 +403,7 @@ def test_dedup_index_incremental(spark, wh, tmp_path):
     assert got_idx, "expected candidates in the synthetic corpus"
     assert all(s in ("corpus", "batch") for _, _, s in got_idx)
     # index-free fallback produces the same candidate set
-    shutil.rmtree(t._dedup_index_dir("text"))
+    shutil.rmtree(t._index_dir("dedup", "text"))
     got_fb = sorted((r.new_id, r.dup_of, r.src)
                     for r in t.dedup_against_index(new).collect())
     assert got_idx == got_fb
@@ -499,7 +502,7 @@ def test_dedup_against_index_matches_reference_paths(spark, wh):
             (1009, 1008, "batch"), (1003, 5, "corpus"),
             (1004, 7, "corpus"), (1006, 1005, "batch")} <= set(indexed[0])
     # index-free fallback: identical corpus rows
-    shutil.rmtree(t._dedup_index_dir("text"))
+    shutil.rmtree(t._index_dir("dedup", "text"))
     for new, got in zip(sources, indexed):
         assert [r for r in rows(t.dedup_against_index(new))
                 if r[2] == "corpus"] == [r for r in got if r[2] == "corpus"]
@@ -540,10 +543,11 @@ def test_embedding_dedup_index_incremental(spark, wh):
     """Persisted sign-LSH band index over embeddings (r9): create →
     delta refresh → bucket-pruned incremental near-dup of a new vector
     batch; a dropped index falls back to banding the corpus on the fly
-    with IDENTICAL candidates; threshold mode keeps only exact-cosine-
-    verified pairs with their score."""
+    with IDENTICAL candidates; threshold mode keeps exactly the
+    candidates whose exact cosine passes, with that cosine as score."""
     import shutil
 
+    import numpy as np
     from pyspark.sql import functions as F
     emb = (spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet")
@@ -560,20 +564,63 @@ def test_embedding_dedup_index_incremental(spark, wh):
                      t.dedup_embeddings_against_index(new).collect())
     assert got_idx and {s for _, _, s in got_idx} == {"corpus", "batch"}
     # index-free fallback produces the same candidate set
-    shutil.rmtree(t._embedding_dedup_index_dir("embedding"))
+    shutil.rmtree(t._index_dir("dedup_vec", "embedding"))
     got_fb = sorted((r.new_id, r.dup_of, r.src) for r in
                     t.dedup_embeddings_against_index(new).collect())
     assert got_idx == got_fb
-    # threshold keeps only true near-dups, with their exact cosine
+    # threshold keeps exactly the candidates whose cosine is >= 0.4,
+    # each with its exact cosine rounded to 4 places
     t.create_embedding_dedup_index()
     v = t.dedup_embeddings_against_index(new, threshold=0.4).collect()
     assert v and all(r.score >= 0.4 for r in v)
-    assert {(r.new_id, r.dup_of) for r in v} <= \
-        {(a, b) for a, b, _ in got_idx}
+    vecs = {r.vec_id: np.asarray(r.embedding, dtype=float)
+            for r in emb.collect()}
+
+    def cos(a, b):
+        x, y = vecs[a], vecs[b]
+        return float(x @ y / (np.linalg.norm(x) * np.linalg.norm(y)))
+    assert all(abs(r.score - round(cos(r.new_id, r.dup_of), 4)) < 1e-4
+               for r in v)
+    got_v = {(r.new_id, r.dup_of, r.src) for r in v}
+    assert len(got_v) == len(v)
+    # pairs within 1e-4 of the threshold may round either way
+    assert {c for c in got_idx if cos(*c[:2]) >= 0.4 + 1e-4} <= got_v \
+        <= {c for c in got_idx if cos(*c[:2]) >= 0.4 - 1e-4}
     # non-append history (delete) forces a rebuild on refresh
     from paimon_spark import P
     t.delete_where(P.eq("vec_id", 2))
     assert t.refresh_embedding_dedup_index() == "rebuilt"
+
+
+def test_remove_orphan_files_keeps_every_index_family(spark, wh):
+    """The four persisted-index families are sidecars outside the
+    manifests: orphan cleanup must leave every one of them intact, so
+    each meta survives and each refresh still finds its index fresh
+    (a walker that skipped only index/vector once deleted the other
+    families' _meta.json, downgrading indexed queries to the
+    on-the-fly fallback)."""
+    import random
+    rng = random.Random(5)
+    sch = T.StructType([T.StructField("id", T.LongType()),
+                        T.StructField("text", T.StringType()),
+                        T.StructField("embedding",
+                                      T.ArrayType(T.DoubleType()))])
+    t = Table.create(f"{wh}/orph", sch, spark=spark)
+    t.append(spark.createDataFrame(
+        [(i, DOCS[i % len(DOCS)][1],
+          [rng.uniform(-1, 1) for _ in range(64)]) for i in range(24)],
+        sch))
+    t.create_vector_index("embedding", n_centroids=2)
+    t.create_text_index(n_buckets=4)
+    t.create_dedup_index(n_buckets=4)
+    t.create_embedding_dedup_index(n_buckets=4)
+    t.remove_orphan_files()
+    assert all(m is not None for m in (
+        t.vector_index_meta(), t.text_index_meta(), t.dedup_index_meta(),
+        t.embedding_dedup_index_meta()))
+    assert [t.refresh_vector_index(), t.refresh_text_index(),
+            t.refresh_dedup_index(),
+            t.refresh_embedding_dedup_index()] == ["fresh"] * 4
 
 
 def test_dedup_verify_broadcast_gate(spark, wh, monkeypatch):
