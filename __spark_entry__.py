@@ -2550,11 +2550,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordering contract: the driver gates the FIRST 50 entries each
-    round, so the order decides which queries it attests.
+    """Ordering contract: the round's correctness gate checks the FIRST
+    50 entries, so the order decides which queries it attests.
     Current window:
     - six entries the r13-r14 optimisation rounds restructured and the
-      driver has not attested since (pipeline_curated_corpus …
+      gate has not attested since (pipeline_curated_corpus …
       zorder_cluster_preserves) lead;
     - the two dedup-index queries whose shared band-key index
       implementation changed last (dedup_incremental_index,
